@@ -52,7 +52,6 @@ _SCRATCH_ZONES: set[str] = set()
 def _cleanup_scratch_zones() -> None:
     for path in _SCRATCH_ZONES:
         shutil.rmtree(path, ignore_errors=True)
-        shutil.rmtree(path + "__upsert_staging", ignore_errors=True)
 
 
 def _scratch_zone(tag: str, sf_dir: str) -> str:
@@ -64,9 +63,7 @@ def _scratch_zone(tag: str, sf_dir: str) -> str:
     return path
 
 
-def zone_roundtrip_daily(
-    spark: SparkSession, sf_dir: str, materialize: bool | None = None
-) -> DataFrame:
+def zone_roundtrip_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SNK-1/SNK-5 + upsert under the oracle: land events as a
     day-partitioned sorted zone (all days but the last), upsert the
     final day through the dynamic-overwrite merge path, re-read the
@@ -77,19 +74,10 @@ def zone_roundtrip_daily(
     write/merge/read cycle (partition-column round-trip included) breaks
     the hash match.
 
-    Scale: the upsert consumes its delta THREE times (touched-partition
-    discovery, collision keys, the merge union — sinks.upsert_zone),
-    so under `materialize` the day slice is eagerly checkpointed and
-    freed as soon as the merge has landed: events is read once for the
-    footer-cheap max-day probe, once for the bulk load, once for the
-    delta (the r14 all-executions scan audit measured 5 without the
-    checkpoint — a 3× re-read of the daily delta at 100 TB)."""
-    from ..operators.checkpoints import (
-        resolve_materialize,
-        unpersist_local_checkpoint,
-    )
-
-    mat = resolve_materialize(materialize)
+    Scale: events is read once for the footer-cheap max-day probe, once
+    for the bulk load, once for the delta — `sinks.upsert_zone`
+    materializes the delta itself before its partition discovery,
+    collision keys and merge union consume it."""
     events = load_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
     )
@@ -104,20 +92,13 @@ def zone_roundtrip_daily(
         sort_within_partitions=["user_id", "ts"],
     )
     # incremental leg: the final day arrives later and is merged in
-    delta = events.filter(F.col("day") == F.lit(last_day))
-    if mat:
-        delta = delta.localCheckpoint(eager=True)
     upsert_zone(
         spark,
-        delta,
+        events.filter(F.col("day") == F.lit(last_day)),
         zone,
         key_cols=["event_id"],
         partition_by=["day"],
     )
-    if mat:
-        # the merge is durably landed before upsert_zone returns; the
-        # delta blocks have no later reader
-        unpersist_local_checkpoint(delta)
     back = spark.read.parquet(zone)
     # two-phase distinct (pre-aggregate per (day, user), then roll up):
     # avoids the Expand plan that doubles every event row through the

@@ -90,4 +90,13 @@ def get_session(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # The monitors' bounded ORDER BY-only hourly window (the allowlisted
+    # pattern in plans/lint.py) makes WindowExec warn "No Partition
+    # Defined" on every plan of it — over a hundred lines per ingest
+    # run. Raise that one logger to ERROR; every other warning stays.
+    jvm = spark._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

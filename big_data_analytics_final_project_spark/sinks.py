@@ -13,7 +13,11 @@ sink (SURVEY.md OPT-8).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from collections.abc import Callable
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -184,8 +188,8 @@ def has_committed_files(fs, zone_path) -> bool:
     """True iff the zone holds committed data: a _SUCCESS marker or any
     *.parquet file not under a _temporary/ attempt directory (failed
     writes leave task-attempt parquet files there — those are debris,
-    not data). Public: streaming/fold.py's crash self-heal path uses
-    the same probe before trusting a zone as fold state."""
+    not data). `upsert_zone` (and so every streaming fold) runs it once
+    per call to decide first write vs merge."""
     it = fs.listFiles(zone_path, True)
     while it.hasNext():
         p = it.next().getPath()
@@ -197,8 +201,19 @@ def has_committed_files(fs, zone_path) -> bool:
     return False
 
 
-# backwards-compatible alias (pre-r11 name)
-_has_committed_files = has_committed_files
+def _partition_filter(partition_by: list[str], parts: set[tuple]) -> Column:
+    """Predicate on the partition columns matching exactly ``parts``
+    (null-safe, so a null partition value selects its default
+    partition) — a pure partition filter, so the scan lists and reads
+    only those partitions' files."""
+
+    def matches(values: tuple) -> Column:
+        return reduce(
+            operator.and_,
+            [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(partition_by, values)],
+        )
+
+    return reduce(operator.or_, map(matches, parts))
 
 
 def upsert_zone(
@@ -207,21 +222,40 @@ def upsert_zone(
     path: str,
     key_cols: list[str],
     partition_by: list[str],
+    merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
 ) -> None:
     """Keyed upsert into a partitioned parquet zone: rows in ``df``
     replace existing rows with the same key; everything else survives.
+    Keys must map to one partition each (the partition columns are a
+    function of the key).
 
-    The merge touches ONLY the partitions present in ``df`` — existing
-    rows of those partitions are kept unless their key collides
-    (anti-join), unioned with the new rows, and landed via dynamic
-    partition overwrite; at 100 TB a daily correction reads and
-    rewrites one day, not the zone. A not-yet-existing zone degrades to
-    a plain first write. The merged frame is staged to a sibling temp
-    path (then re-read for the overwrite) because Spark cannot
-    overwrite a path it is still reading from; staging to durable
-    storage — instead of localCheckpoint's unreplicated executor
-    blocks — survives executor loss mid-upsert, and its footprint is
-    bounded by the affected partitions, not the zone.
+    ``merge(touched, delta)``, when given, turns the touched
+    partitions' current rows and the materialized ``df`` into the
+    replacement rows — one per key of ``df`` (streaming/fold.py's
+    retry-guarded additive merge); by default they are ``df`` itself.
+
+    Each piece of work happens once. ``df`` is materialized with an
+    eager ``localCheckpoint``, whose job also observes the partition
+    values it touches (an empty ``df`` returns here). The zone is
+    probed once for committed data. The touched partitions — only
+    those, selected by a partition filter, so at 100 TB a daily
+    correction reads one day, not the zone — are read once and
+    materialized the same way. Their rows are kept unless their key
+    collides (broadcast anti-join on ``df``'s keys), unioned with the
+    replacement rows, and landed by ONE dynamic partition overwrite.
+    Both checkpoints are freed once the write returns. The broadcast
+    ships ``df``'s whole key set to every task, so ``df`` is
+    micro-batch or correction sized; replacing whole partitions
+    wholesale is `write_zone(..., dynamic_overwrite=True)`.
+
+    The materialized read is what makes the in-place overwrite safe:
+    the merge plan reads executor blocks, not the zone files the
+    overwrite replaces, so no staging copy is needed. Those blocks are
+    unreplicated; if an executor holding them is lost, the write job
+    fails before its commit — a dynamic overwrite only moves new
+    partition directories into place when the job commits — and the
+    call raises with the zone intact. The caller re-runs it (a
+    streaming batch is re-delivered), never a silent partial merge.
 
     First-write-vs-merge is decided by probing for COMMITTED data
     files (*.parquet outside _temporary/, or a _SUCCESS marker), NOT by
@@ -232,22 +266,48 @@ def upsert_zone(
     files that fails to read (corrupt footer, incompatible types) must
     abort, because falling back to overwrite would silently truncate
     the whole zone to this delta batch."""
-    jvm = spark._jvm
-    zone_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = zone_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(zone_path) or not has_committed_files(fs, zone_path):
-        write_zone(df, path, partition_by=partition_by)
-        return
-    existing = spark.read.parquet(path)
-    parts = df.select(*partition_by).distinct()
-    affected = existing.join(F.broadcast(parts), partition_by, "left_semi")
-    keep = affected.join(df.select(*key_cols).distinct(), key_cols, "left_anti")
-    merged = keep.unionByName(df)
-    staging = path.rstrip("/") + "__upsert_staging"
-    write_zone(merged, staging, partition_by=partition_by)
-    staged = spark.read.parquet(staging)
-    write_zone(staged, path, partition_by=partition_by, dynamic_overwrite=True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    from .operators.checkpoints import unpersist_local_checkpoint
+
+    # The touched partition values ride along with the checkpoint job as
+    # an observed metric: one job materializes the delta AND yields the
+    # (partition-count-bounded) set of partitions it touches.
+    touches = Observation()
+    delta = df.observe(
+        touches, F.collect_set(F.struct(*partition_by)).alias("parts")
+    ).localCheckpoint(eager=True)
+    try:
+        parts = {tuple(r) for r in touches.get["parts"]}
+        if not parts:
+            return
+        zone_path = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = zone_path.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(zone_path) or not has_committed_files(fs, zone_path):
+            write_zone(delta, path, partition_by=partition_by)
+            return
+        touched = (
+            spark.read.parquet(path)
+            .filter(_partition_filter(partition_by, parts))
+            .localCheckpoint(eager=True)
+        )
+        try:
+            rows = merge(touched, delta) if merge else delta
+            keep = touched.join(
+                F.broadcast(delta.select(*key_cols)), key_cols, "left_anti"
+            )
+            # Rebalanced on the partition columns: a touched partition
+            # lands as one file while it is small (AQE splits a large
+            # one), so repeated upserts of a partition don't pile up
+            # one more file per call.
+            write_zone(
+                keep.unionByName(rows).hint("rebalance", *partition_by),
+                path,
+                partition_by=partition_by,
+                dynamic_overwrite=True,
+            )
+        finally:
+            unpersist_local_checkpoint(touched)
+    finally:
+        unpersist_local_checkpoint(delta)
 
 
 def zorder_frame(

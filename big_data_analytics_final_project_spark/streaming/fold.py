@@ -12,20 +12,24 @@ partitions, or keys brand-new in this batch) are still folded. A
 wholesale skip keyed on keys-already-present would drop those
 contributions forever (streaming/rollup.py's original analysis).
 
-Scale: the merge reads ONLY the zone rows for the touched keys
-(left-semi on the batch's key set, broadcast — partials are
-micro-batch-sized) and dynamic-overwrites only their partitions via
-`sinks.upsert_zone`.
+Scale: the fold is a merge policy on `sinks.upsert_zone`, so each batch
+does each piece of work once — the partial is materialized once, the
+zone is probed once, only the partitions the partial touches are read
+(once, materialized), and one dynamic overwrite lands them. The guard
+and the additive merge run against those materialized rows, not the
+zone files, which is what lets the overwrite replace the partitions in
+place: an executor lost mid-fold fails the write before it commits,
+the zone stays intact, and the re-delivered batch folds normally.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..sinks import has_committed_files, upsert_zone
+from ..sinks import upsert_zone
 
 
 def retry_guarded_fold(
@@ -41,44 +45,41 @@ def retry_guarded_fold(
     parquet zone at `zone`. `merge_aggs` builds the additive aggregate
     list that merges an existing zone row with a new partial row for
     the same key (called lazily — aggregate constructors may need an
-    active session)."""
-    spark = partial.sparkSession
-    partial = partial.withColumn(
-        "last_batch_id", F.lit(batch_id).cast("bigint")
-    )
-    if not partial.take(1):
-        return
-    # Committed-data probe, not bare fs.exists and not
-    # exception-catching: a crashed FIRST write leaves the zone dir
-    # holding only _temporary/ debris, so exists=true would route every
-    # retry into spark.read.parquet of an empty zone and wedge the
-    # stream permanently. has_committed_files (the same probe
-    # upsert_zone uses to self-heal this case) degrades to a first
-    # write when no committed files exist; a zone WITH committed files
-    # that fails to read still aborts — never degrade real data.
-    jvm = spark._jvm
-    zone_path = jvm.org.apache.hadoop.fs.Path(zone)
-    fs = zone_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(zone_path) or not has_committed_files(fs, zone_path):
-        upsert_zone(
-            spark, partial, zone, key_cols=key_cols, partition_by=partition_by
+    active session).
+
+    An empty partial writes nothing, and a zone without committed data
+    (missing, or only a crashed first write's _temporary/ debris)
+    takes the partial as its first write — both decided inside
+    `upsert_zone`, with the same committed-data probe."""
+
+    def guarded_merge(touched: DataFrame, partial: DataFrame) -> DataFrame:
+        # One row per partial key: its zone row (if any) merged with its
+        # partial row, unless the zone row already records this batch
+        # (or later) — then the partial row is dropped and the zone row
+        # passes through alone. One shuffle on the key serves both the
+        # guard's window and the merge's aggregate.
+        rows = (
+            touched.join(
+                F.broadcast(partial.select(*key_cols)), key_cols, "left_semi"
+            )
+            .withColumn("_new", F.lit(False))
+            .unionByName(partial.withColumn("_new", F.lit(True)))
         )
-        return
-    existing = spark.read.parquet(zone)
-    covered = existing.filter(F.col("last_batch_id") >= batch_id).select(
-        *key_cols
-    )
-    todo = partial.join(F.broadcast(covered), key_cols, "left_anti")
-    if not todo.take(1):
-        return
-    touched = existing.join(
-        F.broadcast(todo.select(*key_cols)), key_cols, "left_semi"
-    )
-    merged = (
-        touched.unionByName(todo)
-        .groupBy(*key_cols)
-        .agg(*merge_aggs(), F.max("last_batch_id").alias("last_batch_id"))
-    )
+        applied = F.max(F.when(~F.col("_new"), F.col("last_batch_id"))).over(
+            Window.partitionBy(*key_cols)
+        )
+        return (
+            rows.withColumn("_applied", F.coalesce(applied, F.lit(-1)))
+            .filter(~F.col("_new") | (F.col("_applied") < batch_id))
+            .groupBy(*key_cols)
+            .agg(*merge_aggs(), F.max("last_batch_id").alias("last_batch_id"))
+        )
+
     upsert_zone(
-        spark, merged, zone, key_cols=key_cols, partition_by=partition_by
+        partial.sparkSession,
+        partial.withColumn("last_batch_id", F.lit(batch_id).cast("bigint")),
+        zone,
+        key_cols=key_cols,
+        partition_by=partition_by,
+        merge=guarded_merge,
     )

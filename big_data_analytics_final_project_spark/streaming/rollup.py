@@ -19,9 +19,13 @@ brand-new in this batch — are still folded. A wholesale skip keyed on
 hours-already-present would drop those contributions forever.
 
 Scale shape:
-- The per-batch aggregate is micro-batch-sized; the merge reads ONLY
-  the zone rows for the touched hours (partition-pruned by day) and
-  dynamic-overwrites only those day partitions (upsert_zone).
+- The per-batch aggregate is micro-batch-sized and materialized once.
+  The merge reads ONLY the day partitions it touches, once, into
+  executor blocks, and dynamic-overwrites those days in place with
+  one write (upsert_zone). Because the merge reads the blocks, not
+  the files it replaces, no staging copy is needed; an executor lost
+  before the commit fails the write and leaves the zone intact for
+  the re-delivered batch.
 - Sums are kept as DECIMAL(38,6) IN THE ZONE — partials of partials
   stay exact no matter how many batches fold in; readers cast at the
   edge.

@@ -312,13 +312,15 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     }),
     ("zone_roundtrip_daily", {
         "events": (3, "footer-cheap max-day probe + bulk load + the "
-                      "checkpointed upsert delta (r14 fix — was 5: "
+                      "upsert delta, which upsert_zone checkpoints "
+                      "before its three consumers (r14 fix — was 5: "
                       "the merge consumed the un-materialized delta "
                       "three times)"),
-        "_nontable": (3, "the write path's own reads: existing-zone "
-                         "merge, staging re-read, final zone "
-                         "read-back — delta-bounded, never "
-                         "corpus-sized"),
+        "_nontable": (2, "the write path's own reads: the touched "
+                         "partitions' one materialized read (no "
+                         "staging re-read since the in-place "
+                         "overwrite) + the final zone read-back — "
+                         "delta-bounded, never corpus-sized"),
     }),
 ]
 

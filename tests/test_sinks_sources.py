@@ -343,7 +343,8 @@ def test_upsert_zone_first_write(spark, tmp_root):
     )
     upsert_zone(spark, df, zone, key_cols=["id"], partition_by=["p"])
     assert spark.read.parquet(zone).count() == 100
-    # second upsert exercises the staging path and cleans it up
+    # second upsert exercises the merge path: the touched partitions are
+    # read once, materialized, and overwritten in place — no staging copy
     upd = (
         spark.range(40)
         .withColumn("p", (F.col("id") % 2).cast("int"))
