@@ -49,14 +49,35 @@ _BASE_CONF = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
+    # Spark's generated-class cache is an LRU of 100 entries. A warm
+    # reference pass (the 12 report queries) needs about 160 distinct
+    # classes and an ingest batch about 25. Swept in a cycle larger
+    # than its capacity an LRU hits nothing, so at the default every
+    # pass compiles every class again. Above the working set the cache
+    # holds only the classes that were actually compiled, so its memory
+    # is bounded by the plans that ran. Static conf: it takes effect
+    # only when get_session builds the first context; a plain driver
+    # session keeps Spark's default.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Columnar shuffle/scan defaults are already on in Spark 4; listed
     # knobs above are the ones we actively depend on.
 }
 
 
+def default_cpus() -> int:
+    """Cores this process may run on (``SPARK_GRAFT_CPUS`` overrides)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g; the other half stays free
+    for Spark's Python workers (``SPARK_GRAFT_DRIVER_MEM`` overrides)."""
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(phys_mb // 2, 16 * 1024)}m"
+
+
 def default_master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    return os.environ.get("SPARK_GRAFT_MASTER", f"local[{default_cpus()}]")
 
 
 def get_session(
@@ -72,19 +93,17 @@ def get_session(
     only real mistake at scale.
     """
     builder = SparkSession.builder.appName(app_name).master(master or default_master())
-    # Local mode runs driver + all 32 executor threads in ONE JVM;
-    # Spark's 1g default heap is sized for a thin cluster driver, not
-    # for 32 concurrent sort/aggregate tasks plus cached frames (the
-    # pagerank edge cache OOM'd it at sf0.1). On a real cluster
+    # Local mode runs the driver and one executor thread per core in ONE
+    # JVM; Spark's 1g default heap is sized for a thin cluster driver,
+    # not for a task per core sorting/aggregating plus cached frames
+    # (the pagerank edge cache OOM'd it at sf0.1). On a real cluster
     # executor memory is provisioned by the resource manager and this
     # knob only feeds the (thin again) driver. Env-overridable;
     # extra_conf still wins (tests pin 8g).
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    )
+    builder = builder.config("spark.driver.memory", default_driver_memory())
     for k, v in _BASE_CONF.items():
         builder = builder.config(k, v)
-    n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_shuffle = shuffle_partitions or default_cpus()
     builder = builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
