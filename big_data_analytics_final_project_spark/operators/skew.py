@@ -46,15 +46,16 @@ def salted_agg(
     `aggs` maps output name → (stage1_agg_column, stage2_merge) where
     stage2_merge is a callable (partial column name → Column) that
     re-aggregates the per-salt partials. Keep exactness-sensitive
-    accumulators (decimal sums) in their exact type through stage 1 and
-    only finalize (cast to double) in stage 2 — merging already-
-    finalized doubles reintroduces order dependence. Example:
+    accumulators in their exact form through stage 1
+    (`functions.numeric.exact_sum_partial`) and only finish them to
+    double in stage 2 (`exact_sum_final`) — merging already-finalized
+    doubles reintroduces order dependence. Example:
 
         salted_agg(events, ["user_id"],
                    {"n": (F.count(F.lit(1)).alias("n"),
                           lambda c: F.sum(c)),
-                    "total": (F.sum(F.col("value").cast(DEC)).alias("total"),
-                              lambda c: F.sum(c).cast("double"))},
+                    "total": (exact_sum_partial("value", "total"),
+                              lambda c: exact_sum_final(c, "total"))},
                    n_salts=16, identity_cols=["event_id"])
     """
     stage1 = (

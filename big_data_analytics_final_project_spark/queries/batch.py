@@ -23,22 +23,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, exact_sum, exact_sum_sql
+from ..functions.numeric import (
+    exact_sum,
+    exact_sum_final,
+    exact_sum_over,
+    exact_sum_partial,
+    exact_sum_sql,
+)
 from ..operators.pairs import copurchase_pairs, copurchase_pairs_hof
 from ..operators.ranks import with_global_ntile
 from ..sources import load_table
 from . import QuerySpec
 
+# Summed expressions as SQL text, shared by the Spark plans and their
+# DuckDB twins.
 _REVENUE = "l_extendedprice * (1 - l_discount)"
-
-
-def _revenue_col() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
+_PROMO_REVENUE = f"CASE WHEN p_type = 'PROMO' THEN {_REVENUE} ELSE 0.0 END"
+_PROFIT = "l_extendedprice * (1 - l_discount) - p_retailprice * l_quantity * 0.1"
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-shaped pricing summary — the engine's vertical slice
-    (scan → pushed filter → hash agg with exact decimal sums → sort).
+    (scan → pushed filter → hash agg with exact scaled-long sums →
+    sort; functions/numeric.py).
 
     Subsumes reference AGG-1's sum/count shape (spark_analysis.py:70-79)
     on a flat fact table.
@@ -60,8 +67,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             exact_sum("l_quantity", "sum_qty"),
             exact_sum("l_extendedprice", "sum_base_price"),
-            exact_sum(_revenue_col(), "sum_disc_price"),
-            exact_sum(_revenue_col() * (1 + F.col("l_tax")), "sum_charge"),
+            exact_sum(_REVENUE, "sum_disc_price"),
+            exact_sum(_REVENUE + " * (1 + l_tax)", "sum_charge"),
             F.count(F.lit(1)).alias("count_order"),
         )
         .withColumn("avg_qty", F.col("sum_qty") / F.col("count_order"))
@@ -102,15 +109,15 @@ def revenue_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the sums, which plans an Expand that doubles every fact row
     through the shuffle. The first phase partial-aggregates map-side
     (duplicate (brand, orderkey) pairs collapse before shuffling), and
-    summing the per-order decimal partials is exactly the overall
-    decimal sum. l_orderkey is non-null, so count(*) over the
-    pre-aggregate equals countDistinct. Measured 16% faster at sf0.1;
-    at 100 TB it also removes the low-cardinality-key expanded
-    shuffle.
+    summing the per-order exact-sum partials (`exact_sum_partial`, two
+    LONG limbs and a count) is exactly the overall sum. l_orderkey is
+    non-null, so count(*) over the pre-aggregate equals countDistinct.
+    Measured 16% faster at sf0.1; at 100 TB it also removes the
+    low-cardinality-key expanded shuffle.
 
     r18: the fact scan is width-healed (operators/spread.py, guide
     §2.5) — a single-row-group zone file serialized the broadcast
-    join + decimal partial aggregation onto one core (1.77s of
+    join + per-order partial aggregation onto one core (1.77s of
     single-task CPU at sf0.1/32 cores); multi-row-group zones are
     untouched."""
     from ..operators.spread import heal_scan_width
@@ -121,19 +128,24 @@ def revenue_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    per_order = (
+    return _brand_rollup(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey, "left")
-        .groupBy("p_brand", "l_orderkey")
-        .agg(
-            F.sum(_revenue_col().cast(DEC)).alias("_rev"),
-            F.sum(F.col("l_quantity").cast(DEC)).alias("_qty"),
-        )
     )
+
+
+def _brand_rollup(lines: DataFrame) -> DataFrame:
+    """revenue_by_brand's two-phase aggregate over brand-joined lines:
+    per-(brand, order) exact-sum partials, then the brand rollup."""
     return (
-        per_order.groupBy("p_brand")
+        lines.groupBy("p_brand", "l_orderkey")
         .agg(
-            F.sum("_rev").cast("double").alias("revenue"),
-            F.sum("_qty").cast("double").alias("units_sold"),
+            exact_sum_partial(_REVENUE, "_rev"),
+            exact_sum_partial("l_quantity", "_qty"),
+        )
+        .groupBy("p_brand")
+        .agg(
+            exact_sum_final("_rev", "revenue"),
+            exact_sum_final("_qty", "units_sold"),
             F.count(F.lit(1)).alias("n_orders"),
         )
         .orderBy(F.col("revenue").desc(), F.col("p_brand"))
@@ -218,7 +230,7 @@ def revenue_by_brand_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_discount",
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    return (
+    return _brand_rollup(
         salted_join(
             li,
             part,
@@ -227,18 +239,6 @@ def revenue_by_brand_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
             identity_cols=["l_orderkey", "p_partkey"],
             how="left",
         )
-        .groupBy("p_brand", "l_orderkey")
-        .agg(
-            F.sum(_revenue_col().cast(DEC)).alias("_rev"),
-            F.sum(F.col("l_quantity").cast(DEC)).alias("_qty"),
-        )
-        .groupBy("p_brand")
-        .agg(
-            F.sum("_rev").cast("double").alias("revenue"),
-            F.sum("_qty").cast("double").alias("units_sold"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy(F.col("revenue").desc(), F.col("p_brand"))
     )
 
 
@@ -406,7 +406,7 @@ def product_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_partkey")
         .agg(
             exact_sum("l_quantity", "units_sold"),
-            exact_sum(_revenue_col(), "revenue"),
+            exact_sum(_REVENUE, "revenue"),
         )
         .orderBy(F.col("units_sold").desc(), F.col("l_partkey"))
         .limit(10)
@@ -547,7 +547,7 @@ def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
-        .agg(exact_sum(_revenue_col(), "revenue"), F.count(F.lit(1)).alias("n_rows"))
+        .agg(exact_sum(_REVENUE, "revenue"), F.count(F.lit(1)).alias("n_rows"))
         .orderBy(
             F.col("l_returnflag").asc_nulls_first(),
             F.col("l_linestatus").asc_nulls_first(),
@@ -581,7 +581,7 @@ def international_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name", "n_name")
-        .agg(exact_sum(_revenue_col(), "revenue"))
+        .agg(exact_sum(_REVENUE, "revenue"))
         .orderBy("r_name", "n_name")
     )
 
@@ -728,7 +728,7 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(exact_sum(_revenue_col(), "revenue"))
+        .agg(exact_sum(_REVENUE, "revenue"))
         .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
         .limit(10)
     )
@@ -796,7 +796,7 @@ def regional_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .groupBy("n_name")
-        .agg(exact_sum(_revenue_col(), "revenue"))
+        .agg(exact_sum(_REVENUE, "revenue"))
         .orderBy(F.col("revenue").desc(), "n_name")
     )
 
@@ -824,21 +824,18 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim join, one output row.
 
     Scale: the month filter is pushed to the lineitem scan; part is a
-    broadcast dim; promo/total are two conditional exact-decimal sums
+    broadcast dim; promo/total are two conditional exact sums
     in ONE aggregation pass (no second scan, no self-join)."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-09-01 00:00:00")))
         & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-10-01 00:00:00")))
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    promo_rev = F.when(F.col("p_type") == "PROMO", _revenue_col()).otherwise(
-        F.lit(0.0)
-    )
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .agg(
-            exact_sum(promo_rev, "promo_revenue"),
-            exact_sum(_revenue_col(), "total_revenue"),
+            exact_sum(_PROMO_REVENUE, "promo_revenue"),
+            exact_sum(_REVENUE, "total_revenue"),
         )
         .withColumn(
             "promo_share",
@@ -852,7 +849,7 @@ SELECT promo_revenue, total_revenue,
        100.0 * promo_revenue / total_revenue AS promo_share
 FROM (
   SELECT
-    {exact_sum_sql(f"CASE WHEN p_type = 'PROMO' THEN {_REVENUE} ELSE 0.0 END", "promo_revenue")},
+    {exact_sum_sql(_PROMO_REVENUE, "promo_revenue")},
     {exact_sum_sql(_REVENUE, "total_revenue")}
   FROM lineitem JOIN part ON l_partkey = p_partkey
   WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
@@ -1324,7 +1321,7 @@ def promo_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(band)
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            exact_sum(_revenue_col(), "revenue"),
+            exact_sum(_REVENUE, "revenue"),
         )
     )
 
@@ -1380,7 +1377,7 @@ def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(exact_sum(_revenue_col(), "revenue"))
+        .agg(exact_sum(_REVENUE, "revenue"))
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)
     )
@@ -1422,7 +1419,7 @@ def top_supplier_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < cutoff_hi)
         )
         .groupBy("l_suppkey")
-        .agg(exact_sum(_revenue_col(), "total_revenue"))
+        .agg(exact_sum(_REVENUE, "total_revenue"))
     )
     best = rev.agg(F.max("total_revenue").alias("_best"))
     supp = load_table(spark, sf_dir, "supplier").select(
@@ -1475,10 +1472,10 @@ def important_part_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     part_val = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")
-        .agg(exact_sum(F.col("l_extendedprice") * F.col("l_quantity"), "value"))
+        .agg(exact_sum("l_extendedprice * l_quantity", "value"))
     )
     total = part_val.agg(
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("_total"),
+        exact_sum("value", "_total"),
         F.count(F.lit(1)).alias("_nparts"),
     )
     return (
@@ -1602,7 +1599,7 @@ def nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(exact_sum(_revenue_col(), "revenue"))
+        .agg(exact_sum(_REVENUE, "revenue"))
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -1903,7 +1900,7 @@ def discount_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             exact_sum(
-                F.col("l_extendedprice") * F.col("l_discount"),
+                "l_extendedprice * l_discount",
                 "revenue_delta",
             ),
             F.count(F.lit(1)).alias("n_lines"),
@@ -1966,17 +1963,17 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    nation1_rev = F.when(
-        F.col("supp_nation") == "NATION_1", _revenue_col()
-    ).otherwise(F.lit(0.0))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust_asia, orders.o_custkey == cust_asia.c_custkey)
         .join(F.broadcast(supp_nat), li.l_suppkey == supp_nat.s_suppkey)
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
-            exact_sum(nation1_rev, "nation_revenue"),
-            exact_sum(_revenue_col(), "total_revenue"),
+            exact_sum(
+                f"CASE WHEN supp_nation = 'NATION_1' THEN {_REVENUE} ELSE 0.0 END",
+                "nation_revenue",
+            ),
+            exact_sum(_REVENUE, "total_revenue"),
         )
         .withColumn(
             "mkt_share", F.col("nation_revenue") / F.col("total_revenue")
@@ -2022,7 +2019,7 @@ def product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier/nation broadcast; lineitem⋈orders shuffles on orderkey;
     one aggregate shuffle on (nation, year). The amount expression is
     written with identical association in both engines and
-    accumulated in exact decimal."""
+    accumulated exactly (functions/numeric.py)."""
     part_w = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").contains("widget"))
@@ -2052,15 +2049,12 @@ def product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_discount",
         "l_quantity",
     )
-    amount = F.col("l_extendedprice") * (
-        1 - F.col("l_discount")
-    ) - F.col("p_retailprice") * F.col("l_quantity") * 0.1
     return (
         li.join(F.broadcast(part_w), li.l_partkey == part_w.p_partkey)
         .join(F.broadcast(supp_nat), li.l_suppkey == supp_nat.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("nation", F.year("o_orderdate").alias("o_year"))
-        .agg(exact_sum(amount, "sum_profit"))
+        .agg(exact_sum(_PROFIT, "sum_profit"))
         .orderBy("nation", F.col("o_year").desc())
     )
 
@@ -2068,11 +2062,7 @@ def product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 PRODUCT_PROFIT_BY_NATION_SQL = f"""
 SELECT n_name AS nation,
        CAST(year(o_orderdate) AS INT) AS o_year,
-       {exact_sum_sql(
-           "l_extendedprice * (1 - l_discount)"
-           " - p_retailprice * l_quantity * 0.1",
-           "sum_profit",
-       )}
+       {exact_sum_sql(_PROFIT, "sum_profit")}
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
 JOIN supplier ON l_suppkey = s_suppkey
@@ -2102,7 +2092,7 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed the (part, supplier) frame twice, and per-branch column
     pruning defeated exchange reuse: the executed plan scanned
     lineitem twice — the r13 scan audit's find). Then a LEFT SEMI
-    into the supplier dim. Quantities accumulate in exact decimal so
+    into the supplier dim. Quantities accumulate exactly so
     the 3×-mean comparison sees identical doubles on both engines."""
     li = load_table(spark, sf_dir, "lineitem")
     ps = li.groupBy("l_partkey", "l_suppkey").agg(
@@ -2112,7 +2102,7 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant = (
         ps.withColumn(
             "total",
-            F.sum(F.col("qty").cast(DEC)).over(by_part).cast("double"),
+            exact_sum_over("qty", "PARTITION BY l_partkey", "total"),
         )
         .withColumn("nsupp", F.count(F.lit(1)).over(by_part))
         .filter(
@@ -2194,7 +2184,7 @@ def bloom_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             exact_sum("l_quantity", "sum_qty"),
-            exact_sum(_revenue_col(), "sum_revenue"),
+            exact_sum(_REVENUE, "sum_revenue"),
         )
         .orderBy("l_returnflag", "l_linestatus")
     )

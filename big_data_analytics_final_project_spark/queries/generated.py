@@ -17,7 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, exact_sum, exact_sum_sql, guarded_div
+from ..functions.numeric import (
+    exact_sum,
+    exact_sum_final,
+    exact_sum_partial,
+    exact_sum_sql,
+    guarded_div,
+)
 from ..generator import (
     gen_products,
     gen_sessions,
@@ -85,12 +91,12 @@ def gen_revenue_by_category(spark: SparkSession, sf_dir: str) -> DataFrame:
         items.join(F.broadcast(p), "product_id", "left")
         .groupBy("category_id", "transaction_id")
         .agg(
-            F.sum(F.col("item_subtotal").cast(DEC)).alias("_rev"),
+            exact_sum_partial("item_subtotal", "_rev"),
             F.sum("quantity").alias("_qty"),
         )
         .groupBy("category_id")
         .agg(
-            F.sum("_rev").cast("double").alias("revenue"),
+            exact_sum_final("_rev", "revenue"),
             F.sum("_qty").cast("bigint").alias("units_sold"),
             F.count(F.lit(1)).alias("n_orders"),
         )

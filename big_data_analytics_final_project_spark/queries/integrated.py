@@ -28,6 +28,8 @@ from ..functions.numeric import (
     corr_components_sql,
     corr_from_components,
     exact_sum,
+    exact_sum_final,
+    exact_sum_partial,
     exact_sum_sql,
 )
 from ..sources import load_table
@@ -240,11 +242,10 @@ def user_spend_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/skew.py) — the plan a 100 TB deployment switches to
     when one key dominates so badly that even AQE's split partitions
     leave a hot final-merge task. Same oracle as `user_spend`: salting
-    must be invisible in the result (decimal partials stay exact
+    must be invisible in the result (exact-sum partials stay exact
     through stage 1, finalized to double only in the merge), so the
     hash match proves the skew path is a pure re-plan, not a
     re-definition."""
-    from ..functions.numeric import DEC
     from ..operators.skew import salted_agg
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -255,8 +256,8 @@ def user_spend_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_cols=["user_id"],
         aggs={
             "total_spent": (
-                F.sum(F.col("o_totalprice").cast(DEC)).alias("total_spent"),
-                lambda c: F.sum(c).cast("double"),
+                exact_sum_partial("o_totalprice", "total_spent"),
+                lambda c: exact_sum_final(c, "total_spent"),
             ),
             "num_orders": (
                 F.count(F.lit(1)).alias("num_orders"),

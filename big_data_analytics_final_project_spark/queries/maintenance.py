@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
 
-from ..functions.numeric import DEC, exact_sum
+from ..functions.numeric import exact_sum, exact_sum_final, exact_sum_partial
 from ..sinks import upsert_zone, write_report_csv, write_zone
 from ..sources import load_table, read_csv_zone, read_json_zone_with_skips
 from . import QuerySpec
@@ -107,13 +107,13 @@ def zone_roundtrip_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy("day", "user_id")
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col("value").cast(DEC)).alias("_v"),
+            exact_sum_partial("value", "_v"),
         )
         .groupBy("day")
         .agg(
             F.sum("_n").alias("n_events"),
             F.count(F.lit(1)).alias("n_users"),
-            F.sum("_v").cast("double").alias("sum_value"),
+            exact_sum_final("_v", "sum_value"),
         )
         .orderBy("day")
     )
@@ -379,7 +379,7 @@ def zone_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             exact_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")),
+                "l_extendedprice * (1 - l_discount)",
                 "revenue",
             ),
         )
@@ -462,13 +462,13 @@ def zone_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         back.groupBy("event_type", "day")
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col("value").cast(DEC)).alias("_v"),
+            exact_sum_partial("value", "_v"),
         )
         .groupBy("event_type")
         .agg(
             F.sum("_n").alias("n_events"),
             F.count(F.lit(1)).alias("n_days"),
-            F.sum("_v").cast("double").alias("sum_value"),
+            exact_sum_final("_v", "sum_value"),
         )
         .orderBy("event_type")
     )
@@ -528,7 +528,7 @@ def zone_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             exact_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")),
+                "l_extendedprice * (1 - l_discount)",
                 "revenue",
             ),
         )
@@ -600,13 +600,13 @@ def bucketed_segment_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("c_mktsegment", "c_custkey")
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col("o_totalprice").cast(DEC)).alias("_v"),
+            exact_sum_partial("o_totalprice", "_v"),
         )
         .groupBy("c_mktsegment")
         .agg(
             F.sum("_n").alias("n_orders"),
             F.count(F.lit(1)).alias("n_customers"),
-            F.sum("_v").cast("double").alias("sum_spent"),
+            exact_sum_final("_v", "sum_spent"),
         )
         .orderBy("c_mktsegment")
     )

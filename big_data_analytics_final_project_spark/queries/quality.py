@@ -251,12 +251,9 @@ def order_totals_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount", "l_tax"
     )
-    charge = (
-        F.col("l_extendedprice")
-        * (1 - F.col("l_discount"))
-        * (1 + F.col("l_tax"))
+    gross = li.groupBy("l_orderkey").agg(
+        exact_sum("l_extendedprice * (1 - l_discount) * (1 + l_tax)", "gross")
     )
-    gross = li.groupBy("l_orderkey").agg(exact_sum(charge, "gross"))
     recon = orders.join(
         gross, orders.o_orderkey == gross.l_orderkey, "full_outer"
     ).select(

@@ -8,8 +8,8 @@ recomputed from the raw event log.
 
 Scale: every query here shuffles once on its partition key and reuses
 that partitioning for any follow-up aggregate. Running sums go through
-the exact-decimal accumulator (functions/numeric.py) so window-frame
-evaluation order can't perturb the float result.
+the exact accumulator (`exact_sum_over`, functions/numeric.py) so
+window-frame evaluation order can't perturb the float result.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, exact_sum, exact_sum_sql
+from ..functions.numeric import exact_sum, exact_sum_over, exact_sum_sql
 from ..operators.asof import asof_join
 from ..operators.rangejoin import interval_join
 from ..operators.sessionize import sessionize, sessionize_sql
@@ -91,16 +91,17 @@ def customer_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cumulative frame + lag)."""
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return orders.select(
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
         "o_totalprice",
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .over(w_run)
-        .cast("double")
-        .alias("running_spend"),
+        exact_sum_over(
+            "o_totalprice",
+            "PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
+            "running_spend",
+        ),
         F.row_number().over(w).alias("order_seq"),
         F.datediff(
             F.col("o_orderdate").cast("date"),
@@ -579,11 +580,6 @@ def user_rolling_7d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the window width. Frame bounds are in epoch days, so ties on the
     same day aggregate identically on both engines."""
     orders = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.unix_date(F.col("order_day")))
-        .rangeBetween(-6, 0)
-    )
     return (
         orders.select(
             "o_custkey",
@@ -593,7 +589,12 @@ def user_rolling_7d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "spend_7d",
-            F.sum(F.col("o_totalprice").cast(DEC)).over(w).cast("double"),
+            exact_sum_over(
+                "o_totalprice",
+                "PARTITION BY o_custkey ORDER BY unix_date(order_day) "
+                "RANGE BETWEEN 6 PRECEDING AND CURRENT ROW",
+                "spend_7d",
+            ),
         )
         .drop("o_totalprice")
         .orderBy("o_custkey", "order_day", "o_orderkey")
@@ -628,7 +629,7 @@ def events_gap_filled_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast(DEC)).alias("sum_dec"),
+        exact_sum("value", "sum_value"),
     )
     bounds = hourly.agg(
         F.min("hour").alias("lo"), F.max("hour").alias("hi")
@@ -646,12 +647,9 @@ def events_gap_filled_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "hour",
             F.coalesce(F.col("n"), F.lit(0)).alias("n_events"),
-            F.coalesce(F.col("sum_dec").cast("double"), F.lit(0.0)).alias(
-                "sum_value"
-            ),
-            F.last(F.col("sum_dec"), ignorenulls=True)
+            F.coalesce(F.col("sum_value"), F.lit(0.0)).alias("sum_value"),
+            F.last(F.col("sum_value"), ignorenulls=True)
             .over(w_fill)
-            .cast("double")
             .alias("sum_value_ffill"),
         )
         .orderBy("hour")

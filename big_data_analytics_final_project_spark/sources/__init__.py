@@ -41,14 +41,15 @@ TABLES = (
 BROADCASTABLE = {"region", "nation", "part", "customer", "supplier"}
 
 # Zone-scan cache: `spark.read.parquet` costs ~100ms of driver-side
-# footer/schema resolution PER CALL, and a grading/bench run calls
+# footer/schema resolution PER CALL, and a benchmark pass calls
 # `load_table` 100+ times on the same handful of zones — a real
-# engine's catalog caches this metadata once. DataFrames are immutable
-# logical plans, so reuse is safe; the cache is scoped per
+# engine's catalog caches this metadata once. The cache is scoped per
 # SparkSession (weak — dies with the session) and restricted to the
-# driver-owned READ-ONLY data root (the environment contract says
-# nothing may write there), so test fixtures that write their own
-# sf_dirs under tmp paths always re-resolve.
+# data root, so test fixtures that write their own sf_dirs under tmp
+# paths always re-resolve. A cached frame holds the file listing of
+# the zone it was resolved from, so each entry is keyed on the zone's
+# (st_size, st_mtime_ns) as well: a rewritten zone (new file, or files
+# added to or removed from a zone directory) is resolved again.
 _DATA_ROOT = os.environ.get("SPARK_GRAFT_DATA_ROOT", "/root/testdata")
 _ZONE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
@@ -83,9 +84,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # symlinks, and relative spellings of the same directory must
         # share one cache entry, not trigger duplicate reads.
         per_session = _ZONE_CACHE.setdefault(spark, {})
+        st = os.stat(f"{real}/{name}.parquet")
+        version = (st.st_size, st.st_mtime_ns)
         cached = per_session.get((real, name))
-        if cached is not None:
-            return cached
+        if cached is not None and cached[0] == version:
+            return cached[1]
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -97,7 +100,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     if cacheable:
-        per_session[(real, name)] = df
+        per_session[(real, name)] = (version, df)
     return df
 
 

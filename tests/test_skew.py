@@ -6,7 +6,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_analytics_final_project_spark.functions.numeric import DEC, exact_sum
+from big_data_analytics_final_project_spark.functions.numeric import (
+    exact_sum,
+    exact_sum_final,
+    exact_sum_partial,
+)
 from big_data_analytics_final_project_spark.operators.skew import (
     salted_agg,
     salted_join,
@@ -29,10 +33,10 @@ def test_salted_agg_matches_plain(spark):
         ["user_id"],
         {
             "n": (F.count(F.lit(1)).alias("n"), lambda c: F.sum(c)),
-            # decimal partials stay decimal through stage 1; finalize in stage 2
+            # exact partials stay exact through stage 1; finish in stage 2
             "total": (
-                F.sum(F.col("value").cast(DEC)).alias("total"),
-                lambda c: F.sum(c).cast("double"),
+                exact_sum_partial("value", "total"),
+                lambda c: exact_sum_final(c, "total"),
             ),
             "max_eid": (F.max("event_id").alias("max_eid"), lambda c: F.max(c)),
         },

@@ -81,3 +81,29 @@ def test_cached_events_frame_keeps_ts_normalization(spark):
     assert again is df
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert df.agg(F.min("ts")).collect()[0][0] is not None
+
+
+def test_rewritten_zone_under_data_root_is_seen(spark, tmp_path, monkeypatch):
+    """A zone rewritten in place under the data root must be resolved
+    again: the cache key carries the zone file's size and mtime, so a
+    cached frame never serves the old file listing."""
+    import duckdb
+
+    import big_data_analytics_final_project_spark.sources as sources
+
+    monkeypatch.setattr(sources, "_DATA_ROOT", str(tmp_path))
+    zone = tmp_path / "orders.parquet"
+
+    def write(n: int) -> None:
+        duckdb.sql(
+            f"COPY (SELECT range AS o_orderkey FROM range({n})) TO '{zone}' (FORMAT parquet)"
+        )
+
+    write(5)
+    a = load_table(spark, str(tmp_path), "orders")
+    assert a is load_table(spark, str(tmp_path), "orders")
+    assert a.count() == 5
+    write(3)
+    b = load_table(spark, str(tmp_path), "orders")
+    assert b is not a
+    assert sorted(r.o_orderkey for r in b.collect()) == [0, 1, 2]
