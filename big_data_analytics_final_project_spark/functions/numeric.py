@@ -52,8 +52,7 @@ result silently.
 **Finish,** once per group: the unscaled sum
 U = sum(hi) * 2^24 + sum(lo) is rebuilt as a DECIMAL(38,6) and cast to
 double exactly as the decimal sum was, so the double is identical by
-construction. A window finishes once per row, so there U < 2^53 is
-divided as a double instead, which rounds identically (`_finish_sql`).
+construction. A window finishes the same way, once per row.
 All-NULL groups and empty inputs give NULL, as SUM does.
 
 **SQL text.** The helpers take the summed expression as Spark SQL text
@@ -128,29 +127,14 @@ def _limbs_sql(x: str, over: str = "") -> tuple[str, str, str]:
     )
 
 
-def _finish_sql(hi: str, lo: str, n: str, per_row: bool = False) -> str:
+def _finish_sql(hi: str, lo: str, n: str) -> str:
     """U = hi * 2^24 + lo as DECIMAL(38,6) (16.777216 is 2^24 / 10^6),
-    cast to double; raises past the limb limit.
-
-    ``per_row`` (window frames, one finish per input row) skips the
-    decimal below 2^53: there U is an exact double, and U / 1e6 is the
-    correctly rounded division that the decimal's cast computes (for
-    |U| < 2^52 Java's ``BigDecimal.doubleValue`` is this very
-    division). It is kept out of group finishes, where it saves no
-    time and triples the size of the expression Spark analyzes."""
-    dec = (
-        f"CAST(CAST(CAST({hi} AS DECIMAL(20,0)) * 16.777216 "
-        f"+ CAST({lo} AS DECIMAL(20,0)) * 0.000001 AS {DEC}) AS DOUBLE)"
-    )
-    if per_row:
-        dec = (
-            f"CASE WHEN abs({hi}) < {1 << 28} AND {lo} < {1 << 52} "
-            f"THEN CAST(shiftleft({hi}, 24) + {lo} AS DOUBLE) / 1e6 ELSE {dec} END"
-        )
+    cast to double; raises past the limb limit."""
     return (
         f"CASE WHEN {n} > {_LIMB_ROWS} THEN raise_error('exact sum: more "
         f"than {_LIMB_ROWS} rows in one group; the 64-bit limbs could "
-        f"overflow') ELSE {dec} END"
+        f"overflow') ELSE CAST(CAST(CAST({hi} AS DECIMAL(20,0)) * 16.777216 "
+        f"+ CAST({lo} AS DECIMAL(20,0)) * 0.000001 AS {DEC}) AS DOUBLE) END"
     )
 
 
@@ -180,9 +164,12 @@ def exact_sum_final(partial: str, alias: str) -> Column:
 
 def exact_sum_over(expr: str, window: str, alias: str) -> Column:
     """`exact_sum` as a window aggregate; ``window`` is the SQL text
-    inside ``OVER (...)``."""
+    inside ``OVER (...)``. A query that needs other functions over the
+    same window builds them from the same text (``F.expr(f"row_number()
+    OVER ({spec})")``), so the window is written once and Spark plans
+    one sort and one window operator for all of them."""
     limbs = _limbs_sql(expr, f" OVER ({window})")
-    return F.expr(_finish_sql(*limbs, per_row=True)).alias(alias)
+    return F.expr(_finish_sql(*limbs)).alias(alias)
 
 
 def exact_sum_hi(col: Column | str, alias: str) -> Column:

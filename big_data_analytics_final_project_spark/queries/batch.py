@@ -20,7 +20,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import (
@@ -2098,13 +2098,10 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = li.groupBy("l_partkey", "l_suppkey").agg(
         exact_sum("l_quantity", "qty")
     )
-    by_part = Window.partitionBy("l_partkey")
+    by_part = "PARTITION BY l_partkey"
     dominant = (
-        ps.withColumn(
-            "total",
-            exact_sum_over("qty", "PARTITION BY l_partkey", "total"),
-        )
-        .withColumn("nsupp", F.count(F.lit(1)).over(by_part))
+        ps.withColumn("total", exact_sum_over("qty", by_part, "total"))
+        .withColumn("nsupp", F.expr(f"count(1) OVER ({by_part})"))
         .filter(
             F.col("qty") > F.lit(3.0) * F.col("total") / F.col("nsupp")
         )

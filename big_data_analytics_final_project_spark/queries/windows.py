@@ -90,7 +90,7 @@ def customer_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running spend + days-since-previous-order per customer
     (cumulative frame + lag)."""
     orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    w = "PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey"
     return orders.select(
         "o_custkey",
         "o_orderkey",
@@ -98,14 +98,13 @@ def customer_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         exact_sum_over(
             "o_totalprice",
-            "PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
+            f"{w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
             "running_spend",
         ),
-        F.row_number().over(w).alias("order_seq"),
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lag(F.col("o_orderdate").cast("date")).over(w),
+        F.expr(f"row_number() OVER ({w})").alias("order_seq"),
+        F.expr(
+            "datediff(CAST(o_orderdate AS DATE), "
+            f"lag(CAST(o_orderdate AS DATE)) OVER ({w}))"
         ).alias("days_since_prev"),
     ).orderBy("o_custkey", "order_seq")
 

@@ -144,9 +144,9 @@ def test_money_products_match_decimal(spark):
 
 
 def test_finish_either_side_of_2_53(spark):
-    """A window's finish divides U = sum(k) as a double below 2^53 and
-    casts the rebuilt DECIMAL above; a group's always casts. Every path
-    must give the decimal sum's double."""
+    """Sums either side of 2^53, where U = sum(k) stops being an exact
+    double, must give the decimal sum's double on groups and on running
+    windows alike."""
     u52, u53 = 2**52 / 1e6, 2**53 / 1e6
     groups = [
         [u52 / 2 - 1e-6, u52 / 2],
