@@ -5,8 +5,9 @@ Floating-point SUM is order-dependent, and Spark's aggregation order
 sidesteps this by rounding to 2dp (reference spark_analysis.py:75,99);
 we go further: every money/measure SUM is exact, and only the finished
 sum is cast to double. The double is bit-identical no matter the
-partitioning, and equal to the DuckDB twin
-``CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE)`` (`exact_sum_sql`).
+partitioning, and equal to the DuckDB twin `exact_sum_sql`, which sums
+``CAST(x AS DECIMAL(38,6))`` (cast through VARCHAR, `dec_sql`) and
+casts the sum to double.
 Scalar +,-,*,/ on identical doubles are IEEE-deterministic and need no
 such treatment.
 
@@ -60,7 +61,8 @@ All-NULL groups and empty inputs give NULL, as SUM does.
 sum with one ``F.expr``. Built from Column calls, one sum took about 40
 of them, and in PySpark 4 each call is several py4j round trips plus a
 call-site capture; a reference pass builds its plans on every run, so
-that alone cost more than a second per pass.
+that alone cost more than a second per pass. `exact_sum_text` returns
+the text itself, for statements written as SQL.
 
 **Partials.** `exact_sum_partial` aggregates a sub-group to its
 (hi, lo, n) struct and `exact_sum_final` sums those fields and
@@ -138,14 +140,21 @@ def _finish_sql(hi: str, lo: str, n: str) -> str:
     )
 
 
+def exact_sum_text(expr: str, window: str | None = None) -> str:
+    """Spark SQL text of `exact_sum` over ``expr`` (of
+    `exact_sum_over` when ``window``, the text inside ``OVER (...)``,
+    is given), for statements written as SQL."""
+    over = "" if window is None else f" OVER ({window})"
+    return _finish_sql(*_limbs_sql(expr, over))
+
+
 def exact_sum(expr: str, alias: str) -> Column:
     """Exact SUM of the SQL expression ``expr`` on the scaled-long
     accumulator, returned as double.
 
-    Oracle twin: `exact_sum_sql` (``CAST(SUM(CAST(x AS DECIMAL(38,6)))
-    AS DOUBLE)``), usually over the same ``expr`` text.
+    Oracle twin: `exact_sum_sql`, usually over the same ``expr`` text.
     """
-    return F.expr(_finish_sql(*_limbs_sql(expr))).alias(alias)
+    return F.expr(exact_sum_text(expr)).alias(alias)
 
 
 def exact_sum_partial(expr: str, alias: str) -> Column:
@@ -168,8 +177,7 @@ def exact_sum_over(expr: str, window: str, alias: str) -> Column:
     same window builds them from the same text (``F.expr(f"row_number()
     OVER ({spec})")``), so the window is written once and Spark plans
     one sort and one window operator for all of them."""
-    limbs = _limbs_sql(expr, f" OVER ({window})")
-    return F.expr(_finish_sql(*limbs)).alias(alias)
+    return F.expr(exact_sum_text(expr, window)).alias(alias)
 
 
 def exact_sum_hi(col: Column | str, alias: str) -> Column:
@@ -265,6 +273,17 @@ def dec2dbl_sql(expr: str) -> str:
     return f"CAST(CAST({expr} AS VARCHAR) AS DOUBLE)"
 
 
+def dec_sql(expr: str) -> str:
+    """DuckDB twin of Spark's ``CAST(x AS DECIMAL(38,6))``.
+
+    Spark casts a double through its decimal string
+    (``Double.toString``) and rounds that half-up at 6 digits. DuckDB's
+    direct cast rounds the binary value instead, so on a 7th-digit tie
+    whose double lies just below it (1234.5678905) the two differ by
+    1e-6. Casting DuckDB's own shortest string gives Spark's digits."""
+    return f"CAST(CAST({expr} AS VARCHAR) AS DECIMAL(38,6))"
+
+
 def exact_sum_sql(expr: str, alias: str) -> str:
     """Oracle twin of `exact_sum` as a SQL fragment."""
-    return f"{dec2dbl_sql(f'SUM(CAST({expr} AS DECIMAL(38,6)))')} AS {alias}"
+    return f"{dec2dbl_sql(f'SUM({dec_sql(expr)})')} AS {alias}"

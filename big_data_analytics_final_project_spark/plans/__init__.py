@@ -125,7 +125,17 @@ def executed_scan_counts(spark, run, extras=None):
         return {lst.apply(i).executionId() for i in range(lst.size())}
 
     before = _ids()
-    result = run()
+    # The descriptions are rendered when each execution starts and at
+    # each adaptive re-plan, in the session's explain mode; the parser
+    # needs formatted's numbered detail headers to resolve scan nodes
+    # to tables. Only this sweep pays for that format.
+    mode_key = "spark.sql.ui.explainMode"
+    mode_before = spark.conf.get(mode_key)
+    spark.conf.set(mode_key, "formatted")
+    try:
+        result = run()
+    finally:
+        spark.conf.set(mode_key, mode_before)
     try:  # drain async listener events (final AQE plan updates)
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
     except Exception:  # pragma: no cover — non-classic backends
@@ -241,11 +251,11 @@ def _desc_scan_tables(desc: str):
         id_to_table[m.group(1)] = table
 
     flags: set[str] = set()
-    # Guard the formatted-explain assumption (r14 advice #2): the
-    # session pins spark.sql.ui.explainMode=formatted, but if a
-    # caller's session didn't, the description carries scan nodes
-    # with NO numbered detail headers and every scan would silently
-    # attribute to '?'. Flag it instead.
+    # Guard the formatted-explain assumption: executed_scan_counts sets
+    # spark.sql.ui.explainMode=formatted while its run executes, but a
+    # description rendered in another mode carries scan nodes with NO
+    # numbered detail headers and every scan would silently attribute
+    # to '?'. Flag it instead.
     if not id_to_table and "Scan parquet" in desc:
         flags.add("no_detail_headers")
 

@@ -13,9 +13,14 @@ Scale notes (100 TB):
 - Top-K uses orderBy+limit which Catalyst plans as
   TakeOrderedAndProject — per-partition heaps + driver merge, never a
   full global sort (SURVEY OPT-9).
-- The pair self-join shuffles both sides by order key once; per-order
-  fan-out is bounded (dedup first — SURVEY OPT-4), and AQE skew-join
-  splits any hot order.
+- Where a fact scan is spread (operators/spread.py), the spread hashes
+  on the key of the operator that follows, so each fact row crosses
+  one exchange: `revenue_by_brand` hashes lineitem on `l_orderkey`,
+  the key of its per-(brand, order) aggregate.
+- The pair self-join hashes the (order, product) items on the order
+  key once; the dedup and both join sides share that partitioning.
+  Per-order fan-out is bounded (dedup first — SURVEY OPT-4), and AQE
+  skew-join splits any hot order.
 """
 
 from __future__ import annotations
@@ -85,8 +90,8 @@ SELECT l_returnflag, l_linestatus,
        {exact_sum_sql(_REVENUE, "sum_disc_price")},
        {exact_sum_sql(_REVENUE + " * (1 + l_tax)", "sum_charge")},
        count(*) AS count_order,
-       CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_qty,
-       CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_price
+       CAST(CAST(SUM(CAST(CAST(l_quantity AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_qty,
+       CAST(CAST(SUM(CAST(CAST(l_extendedprice AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_price
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
@@ -115,17 +120,21 @@ def revenue_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured 16% faster at sf0.1; at 100 TB it also removes the
     low-cardinality-key expanded shuffle.
 
-    r18: the fact scan is width-healed (operators/spread.py, guide
-    §2.5) — a single-row-group zone file serialized the broadcast
-    join + per-order partial aggregation onto one core (1.77s of
-    single-task CPU at sf0.1/32 cores); multi-row-group zones are
-    untouched."""
+    Layout heal (operators/spread.py): a single-row-group lineitem
+    file would run the broadcast join and the per-order partial
+    aggregation on one core, so on that layout the scan is spread by
+    a hash on ``l_orderkey``. The hash also satisfies the
+    per-(brand, order) aggregate, which then needs no exchange of its
+    own: the plan shuffles the fact rows once, on the key the
+    aggregate needs. Multi-row-group zones are untouched, and there
+    the aggregate's own exchange is the one shuffle."""
     from ..operators.spread import heal_scan_width
 
     li = heal_scan_width(
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-        )
+        ),
+        "l_orderkey",
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     return _brand_rollup(
@@ -533,7 +542,7 @@ SEGMENT_PURCHASING_POWER_SQL = f"""
 SELECT c_mktsegment,
        count(*) AS n_customers,
        {exact_sum_sql("c_acctbal", "sum_acctbal")},
-       CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_acctbal
+       CAST(CAST(SUM(CAST(CAST(c_acctbal AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_acctbal
 FROM customer c
 WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
 GROUP BY c_mktsegment
@@ -891,7 +900,7 @@ SELECT CASE WHEN grouping(o_orderstatus) = 0 THEN 'by_status'
             ELSE 'total' END AS level,
        o_orderstatus, o_orderpriority,
        count(*) AS n_orders,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
+       CAST(CAST(SUM(CAST(CAST(o_totalprice AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
          AS sum_total
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
@@ -1139,7 +1148,7 @@ WITH qty AS (
   SELECT l_orderkey, {exact_sum_sql("l_quantity", "sum_qty")}
   FROM lineitem
   GROUP BY l_orderkey
-  HAVING CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS VARCHAR)
+  HAVING CAST(CAST(SUM(CAST(CAST(l_quantity AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR)
               AS DOUBLE) > 250.0
 )
 SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, sum_qty
@@ -1201,7 +1210,7 @@ SELECT c_mktsegment,
        {exact_sum_sql("c_acctbal", "sum_acctbal")}
 FROM customer
 WHERE c_acctbal > (
-        SELECT CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS VARCHAR)
+        SELECT CAST(CAST(SUM(CAST(CAST(c_acctbal AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR)
                     AS DOUBLE) / count(*)
         FROM customer WHERE c_acctbal > 0.0
       )
@@ -1266,13 +1275,13 @@ def small_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 SMALL_ORDER_REVENUE_SQL = """
 WITH thr AS (
   SELECT l_partkey AS t_partkey,
-         CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS VARCHAR)
+         CAST(CAST(SUM(CAST(CAST(l_quantity AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR)
               AS DOUBLE) / count(*) * 0.2 AS qty_thr
   FROM lineitem
   GROUP BY l_partkey
 )
 SELECT count(*) AS n_lines,
-       CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS VARCHAR)
+       CAST(CAST(SUM(CAST(CAST(l_extendedprice AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR)
             AS DOUBLE) / 7.0 AS avg_yearly
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -1489,13 +1498,13 @@ def important_part_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 IMPORTANT_PART_SHARE_SQL = """
 WITH part_val AS (
   SELECT l_partkey,
-         CAST(CAST(SUM(CAST(l_extendedprice * l_quantity AS DECIMAL(38,6)))
+         CAST(CAST(SUM(CAST(CAST(l_extendedprice * l_quantity AS VARCHAR) AS DECIMAL(38,6)))
               AS VARCHAR) AS DOUBLE) AS value
   FROM lineitem
   GROUP BY l_partkey
 ),
 tot AS (
-  SELECT CAST(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
+  SELECT CAST(CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
            AS _total,
          count(*) AS _nparts
   FROM part_val
@@ -1989,9 +1998,9 @@ SELECT CAST(year(o_orderdate) AS INT) AS o_year,
            "nation_revenue",
        )},
        {exact_sum_sql(_REVENUE, "total_revenue")},
-       CAST(CAST(SUM(CAST(CASE WHEN sn.n_name = 'NATION_1' THEN {_REVENUE}
-                          ELSE 0.0 END AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
-         / CAST(CAST(SUM(CAST({_REVENUE} AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
+       CAST(CAST(SUM(CAST(CAST(CASE WHEN sn.n_name = 'NATION_1' THEN {_REVENUE}
+                          ELSE 0.0 END AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
+         / CAST(CAST(SUM(CAST(CAST({_REVENUE} AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
          AS mkt_share
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey

@@ -311,7 +311,7 @@ kept AS (
 SELECT lang, source,
        count(*) AS n_docs,
        {exact_sum_sql("quality_score", "sum_quality")},
-       CAST(CAST(SUM(CAST(quality_score AS DECIMAL(38,6))) AS VARCHAR)
+       CAST(CAST(SUM(CAST(CAST(quality_score AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR)
             AS DOUBLE) / count(*) AS avg_quality
 FROM kept
 GROUP BY lang, source

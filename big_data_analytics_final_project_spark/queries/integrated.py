@@ -11,10 +11,13 @@ JOIN-3, FN-2..FN-5, SRT-4 (SURVEY.md §2).
 Mapping onto the engine's zones: `events` plays the session log
 (user_id, value≈duration), `orders` plays the transaction spend.
 
-Scale: both aggregations shuffle once on user key; the join keys are
-already the aggregation output keys so AQE can plan it without an extra
-exchange. The percentile thresholds aggregate to a single row that is
-broadcast back — no driver round-trip, no collect.
+Scale: `engagement_vs_spend` and `segment_counts` are one SQL
+statement over one per-user relation (`_segmented`). Events and orders
+are each scanned once and aggregated with one shuffle on the user key;
+the left join reuses that partitioning. The 75th-percentile thresholds
+are `percentile(...) OVER ()` window columns over the joined users, so
+no second aggregate branch re-reads the inputs and nothing is
+broadcast back.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from ..functions.numeric import (
     exact_sum_final,
     exact_sum_partial,
     exact_sum_sql,
+    exact_sum_text,
 )
 from ..sources import load_table
 from . import QuerySpec
@@ -56,7 +60,7 @@ USER_ENGAGEMENT_SQL = f"""
 SELECT user_id,
        count(*) AS sessions_count,
        {exact_sum_sql("value", "total_duration")},
-       CAST(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_duration
+       CAST(CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_duration
 FROM events
 GROUP BY user_id
 ORDER BY user_id
@@ -269,12 +273,37 @@ def user_spend_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-def _joined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eng = user_engagement(spark, sf_dir)
-    spend = user_spend(spark, sf_dir)
-    return (
-        eng.join(spend, "user_id", "left")
-        .na.fill({"total_spent": 0.0, "num_orders": 0})
+# The per-user relation of the integrated analytics, as Spark SQL over
+# the `{events}` and `{orders}` frames; `_JOINED_SQL` is its DuckDB twin.
+_PER_USER_SPARK_SQL = f"""
+eng AS (
+  SELECT user_id, count(1) AS sessions_count,
+         {exact_sum_text("value")} AS total_duration
+  FROM {{events}} GROUP BY user_id
+),
+spend AS (
+  SELECT o_custkey AS user_id,
+         {exact_sum_text("o_totalprice")} AS total_spent,
+         count(1) AS num_orders
+  FROM {{orders}} GROUP BY o_custkey
+),
+joined AS (
+  SELECT e.user_id, e.sessions_count, e.total_duration,
+         e.total_duration / e.sessions_count AS avg_duration,
+         COALESCE(s.total_spent, 0.0D) AS total_spent,
+         COALESCE(s.num_orders, 0L) AS num_orders
+  FROM eng e LEFT JOIN spend s ON e.user_id = s.user_id
+)
+"""
+
+
+def _per_user(spark: SparkSession, sf_dir: str, select: str) -> DataFrame:
+    """Run ``select``, a query over the per-user relation's CTEs
+    (``eng``, ``spend`` and their left join ``joined``)."""
+    return spark.sql(
+        f"WITH {_PER_USER_SPARK_SQL} {select}",
+        events=load_table(spark, sf_dir, "events"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -282,7 +311,7 @@ _JOINED_SQL = f"""
 eng AS (
   SELECT user_id, count(*) AS sessions_count,
          {exact_sum_sql("value", "total_duration")},
-         CAST(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_duration
+         CAST(CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) / count(*) AS avg_duration
   FROM events GROUP BY user_id
 ),
 spend AS (
@@ -300,52 +329,47 @@ joined AS (
 """
 
 
+def _segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """engagement_vs_spend's columns, unsorted: the per-user relation
+    with its derived columns and its segment, in one statement.
+
+    The thresholds are window aggregates (``percentile(...) OVER
+    ()``) over the joined users, so events and orders are scanned once
+    each: a separate thresholds aggregate prunes the relation
+    differently and re-reads both. The window runs on one task, over
+    users, not events. An exact percentile aggregate has the same
+    bound: its final buffer holds every user on one task."""
+    return _per_user(spark, sf_dir, """
+SELECT user_id, sessions_count, total_duration, avg_duration,
+       total_spent, num_orders,
+       sessions_count * (1.0D + avg_duration / 600.0D) AS engagement_score,
+       CASE WHEN num_orders > 0 THEN total_spent / num_orders
+            ELSE 0.0D END AS spend_per_order,
+       num_orders > 0 AS is_buyer,
+       CASE
+         WHEN sessions_count >= q_sessions AND total_spent >= q_spend
+           THEN 'champions'
+         WHEN sessions_count >= q_sessions THEN 'window_shoppers'
+         WHEN total_spent >= q_spend THEN 'efficient_buyers'
+         ELSE 'casual'
+       END AS segment
+FROM (
+  SELECT *,
+         CAST(percentile(sessions_count, 0.75) OVER () AS DOUBLE) AS q_sessions,
+         CAST(percentile(total_spent, 0.75) OVER () AS DOUBLE) AS q_spend
+  FROM joined
+)
+""")
+
+
 def engagement_vs_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full integrated analytic — join + null-fill (JOIN-3/FN-11),
     derived expressions (FN-2..FN-5: the reference's row-wise pandas
-    `apply` lambdas become `when/otherwise` columns), and 4-way
-    segmentation on exact 75th-percentile thresholds (AGG-10/FN-4,
+    `apply` lambdas become CASE columns), and 4-way segmentation on
+    exact 75th-percentile thresholds (AGG-10/FN-4,
     integrated_query_engagement_vs_spend.py:195-220)."""
-    joined = _joined(spark, sf_dir)
-    thresholds = joined.agg(
-        F.expr("CAST(percentile(sessions_count, 0.75) AS DOUBLE)").alias("q_sessions"),
-        F.expr("CAST(percentile(total_spent, 0.75) AS DOUBLE)").alias("q_spend"),
-    )
-    high_eng = F.col("sessions_count") >= F.col("q_sessions")
-    high_spend = F.col("total_spent") >= F.col("q_spend")
-    return (
-        joined.crossJoin(F.broadcast(thresholds))
-        .withColumn(
-            "engagement_score",
-            F.col("sessions_count") * (1.0 + F.col("avg_duration") / 600.0),
-        )
-        .withColumn(
-            "spend_per_order",
-            F.when(
-                F.col("num_orders") > 0, F.col("total_spent") / F.col("num_orders")
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn("is_buyer", F.col("num_orders") > 0)
-        .withColumn(
-            "segment",
-            F.when(high_eng & high_spend, "champions")
-            .when(high_eng & ~high_spend, "window_shoppers")
-            .when(~high_eng & high_spend, "efficient_buyers")
-            .otherwise("casual"),
-        )
-        .select(
-            "user_id",
-            "sessions_count",
-            "total_duration",
-            "avg_duration",
-            "total_spent",
-            "num_orders",
-            "engagement_score",
-            "spend_per_order",
-            "is_buyer",
-            "segment",
-        )
-        .orderBy(F.col("total_spent").desc(), F.col("sessions_count").desc(), "user_id")
+    return _segmented(spark, sf_dir).orderBy(
+        F.col("total_spent").desc(), F.col("sessions_count").desc(), "user_id"
     )
 
 
@@ -380,7 +404,7 @@ def engagement_spend_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     227-228), built from exact decimal moment sums so the result is
     partitioning-independent (see functions/numeric.py). Degenerate
     input → 0.0, matching the reference's guard."""
-    joined = _joined(spark, sf_dir).filter(F.col("total_spent") > 0)
+    joined = _per_user(spark, sf_dir, "SELECT * FROM joined WHERE total_spent > 0")
     spent = F.col("total_spent")
     comp1 = joined.agg(*corr_components(spent, F.col("sessions_count").cast("double")))
     comp2 = joined.agg(*corr_components(spent, F.col("total_duration")))
@@ -410,7 +434,7 @@ def segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Segment frequency — reference AGG-12 (`value_counts()`,
     integrated_query_engagement_vs_spend.py:230)."""
     return (
-        engagement_vs_spend(spark, sf_dir)
+        _segmented(spark, sf_dir)
         .groupBy("segment")
         .agg(F.count(F.lit(1)).alias("n_users"))
         .orderBy("segment")

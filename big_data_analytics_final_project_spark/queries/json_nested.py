@@ -169,7 +169,7 @@ WITH nested AS (
 SELECT l_orderkey,
        len(items) AS n_items,
        array_to_string(list_transform(items, x -> x.pk), ',') AS part_keys,
-       {dec2dbl_sql("list_aggregate(list_transform(items, x -> CAST(x.price AS DECIMAL(38,6))), 'sum')")}
+       {dec2dbl_sql("list_aggregate(list_transform(items, x -> CAST(CAST(x.price AS VARCHAR) AS DECIMAL(38,6))), 'sum')")}
          AS order_total,
        list_max(list_transform(items, x -> x.qty)) AS max_qty
 FROM nested

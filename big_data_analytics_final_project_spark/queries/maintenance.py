@@ -123,7 +123,7 @@ ZONE_ROUNDTRIP_DAILY_SQL = """
 SELECT CAST(ts AS DATE) AS day,
        count(*) AS n_events,
        count(DISTINCT user_id) AS n_users,
-       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+       CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
 FROM events
 GROUP BY day
 ORDER BY day
@@ -154,7 +154,7 @@ def report_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 REPORT_CSV_ROUNDTRIP_SQL = """
 SELECT o_custkey,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total_spent,
+       CAST(SUM(CAST(CAST(o_totalprice AS VARCHAR) AS DECIMAL(38,6))) AS DOUBLE) AS total_spent,
        count(*) AS num_orders
 FROM orders
 GROUP BY o_custkey
@@ -203,7 +203,7 @@ JSON_INGEST_ROUNDTRIP_SQL = """
 SELECT event_type,
        count(*) AS n_events,
        count(DISTINCT user_id) AS n_users,
-       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+       CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
 FROM events
 GROUP BY event_type
 ORDER BY event_type
@@ -263,7 +263,7 @@ def json_ingest_with_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
 JSON_INGEST_WITH_ERRORS_SQL = """
 SELECT event_type,
        count(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+       CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
 FROM events
 GROUP BY event_type
 ORDER BY event_type
@@ -329,7 +329,7 @@ def events_jsonl_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 EVENTS_JSONL_SOURCE_SCAN_SQL = """
 SELECT user_id,
        count(*) AS n_purchases,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
+       CAST(CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE)
          AS sum_value
 FROM events
 WHERE event_type = 'purchase'
@@ -390,7 +390,7 @@ def zone_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZONE_ZORDER_PRUNE_SQL = """
 SELECT l_returnflag,
        count(*) AS n_items,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
+       CAST(SUM(CAST(CAST(l_extendedprice * (1 - l_discount) AS VARCHAR) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
@@ -478,7 +478,7 @@ ZONE_COMPACTION_ROUNDTRIP_SQL = """
 SELECT event_type,
        count(*) AS n_events,
        count(DISTINCT CAST(ts AS DATE)) AS n_days,
-       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
+       CAST(SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
 FROM events
 WHERE ts IS NOT NULL
 GROUP BY event_type
@@ -539,7 +539,7 @@ def zone_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZONE_ORC_ROUNDTRIP_SQL = """
 SELECT l_returnflag, l_linestatus,
        count(*) AS n_items,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
+       CAST(SUM(CAST(CAST(l_extendedprice * (1 - l_discount) AS VARCHAR) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
@@ -627,7 +627,7 @@ BUCKETED_SEGMENT_SPEND_SQL = """
 WITH per_cust AS (
   SELECT c_mktsegment, c_custkey,
          count(*) AS n,
-         SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS v
+         SUM(CAST(CAST(o_totalprice AS VARCHAR) AS DECIMAL(38,6))) AS v
   FROM customer JOIN orders ON o_custkey = c_custkey
   GROUP BY 1, 2
 )

@@ -111,7 +111,7 @@ def customer_order_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CUSTOMER_ORDER_HISTORY_SQL = """
 SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) OVER (
+       CAST(CAST(SUM(CAST(CAST(o_totalprice AS VARCHAR) AS DECIMAL(38,6))) OVER (
          PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
        ) AS VARCHAR) AS DOUBLE) AS running_spend,
@@ -603,7 +603,7 @@ def user_rolling_7d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 USER_ROLLING_7D_SPEND_SQL = """
 SELECT o_custkey, o_orderkey,
        CAST(o_orderdate AS DATE) AS order_day,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) OVER (
+       CAST(SUM(CAST(CAST(o_totalprice AS VARCHAR) AS DECIMAL(38,6))) OVER (
          PARTITION BY o_custkey
          ORDER BY CAST(o_orderdate AS DATE)
          RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW
@@ -659,7 +659,7 @@ EVENTS_GAP_FILLED_HOURLY_SQL = """
 WITH hourly AS (
   SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
          count(*) AS n,
-         SUM(CAST(value AS DECIMAL(38,6))) AS sum_dec
+         SUM(CAST(CAST(value AS VARCHAR) AS DECIMAL(38,6))) AS sum_dec
   FROM events GROUP BY 1
 ),
 bounds AS (SELECT min(hour) AS lo, max(hour) AS hi FROM hourly),

@@ -34,12 +34,13 @@ _BASE_CONF = {
     # cannot map; read them as raw nanos and convert in the loader.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
-    # The executed-scan audit (plans/executed_scan_counts) parses the
-    # SQL status store's physicalPlanDescription, whose layout follows
-    # this mode — the parser needs formatted's numbered detail headers
-    # to resolve scan nodes to tables (r14 advice: a simple/extended
-    # mode would silently attribute every scan to '?').
-    "spark.sql.ui.explainMode": "formatted",
+    # Every SQL execution renders its plan description for the status
+    # store when it starts and at each adaptive re-plan. Spark's default
+    # mode, formatted, adds a detail section that reprints every node's
+    # expressions (the exact-sum CASE texts are long). Only the
+    # executed-scan audit reads that format, and
+    # plans.executed_scan_counts switches to it for its own run.
+    "spark.sql.ui.explainMode": "simple",
     # InferFiltersFromGenerate turns every explode(f(x)) into a pushed
     # Filter(size(f(x))>0) that re-inlines f — for computed arrays
     # (shingles, band keys) that doubles the most expensive expression

@@ -68,12 +68,9 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     # dedup_fuzzy_pairs: no entry — r16 drained its 3-scan allowance:
     # the (doc_id, 48-char slice) frame is checkpointed once and both
     # blocked self-join sides derive from it (1 documents scan).
-    ("also_bought_pairs", {
-        "orders": (2, "pair self-join sides over the basket relation")
-    }),
-    ("pairs_via_hof", {
-        "orders": (2, "twin of also_bought_pairs")
-    }),
+    # also_bought_pairs / pairs_via_hof: no entry — they read lineitem,
+    # not orders, once each (the self-join's second side reuses the
+    # first side's exchange).
     ("waiting_supplier", {
         "lineitem": (3, "TPC-H Q21 EXISTS / NOT EXISTS branches"),
         "orders": (2, "status filter branch + count branch"),
@@ -87,13 +84,14 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
         "orders": (2, "parent for lineitem + child for customer"),
         "events": (1, "user-FK child"),
     }),
-    ("engagement_vs_spend", {
-        "events": (2, "sessions and engagement branches prune differently"),
-        "orders": (2, "spend branch + buyer-flag branch"),
-    }),
+    # engagement_vs_spend: no entry — its percentile thresholds are
+    # window columns over the one per-user relation, so events and
+    # orders are scanned once each (was 2 and 2: a second aggregate
+    # branch pruned differently and re-read both).
     ("engagement_spend_correlation", {
-        "events": (2, "same two event branches as engagement_vs_spend"),
-        "orders": (2, "same two order branches"),
+        "events": (2, "its two moment aggregates read different "
+                      "per-user columns, so the engagement aggregate "
+                      "prunes differently in each branch"),
     }),
     ("customer_cohort_setops", {
         "orders": (2, "one scan per disjoint year filter; the distinct "
@@ -350,8 +348,9 @@ _SHUFFLE_REBASELINE: dict[str, str] = {
     # single-row-group layout otherwise serializes the map side onto
     # one core; measured per-query wins in OPTIMIZATION_r18.md. On
     # multi-row-group zones the gate never fires and the count
-    # returns to its prior.
-    "revenue_by_brand": "r18 width-heal: +1 pre-join exchange",
+    # returns to its prior. revenue_by_brand has no entry: its heal
+    # hashes on l_orderkey and replaces the per-(brand, order)
+    # aggregate's exchange instead of adding one.
     "bloom_pruned_revenue": "r18 width-heal: +1 pre-probe exchange",
     "corpus_bpe_encode": "r18 width-heal: +1 pre-tokenize exchange",
     "corpus_overlap_kmv": "r18 width-heal: +1 pre-shingle exchange",

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from big_data_analytics_final_project_spark.plans import (
     assert_broadcast_join,
     assert_no_cartesian,
@@ -933,8 +935,8 @@ def test_desc_scan_tables_flags_missing_detail_headers():
     """If a session runs with a non-formatted explain mode the plan
     description carries scan nodes but NO numbered '(n) Scan parquet'
     detail headers — every scan would silently attribute to '?'. The
-    parser must flag it (the session pins explainMode=formatted; this
-    is the belt-and-braces for foreign sessions)."""
+    parser must flag it (executed_scan_counts sets explainMode=formatted
+    only while its own run executes; the session default is simple)."""
     from big_data_analytics_final_project_spark.plans import (
         _desc_scan_tables,
     )
@@ -948,3 +950,79 @@ def test_desc_scan_tables_flags_missing_detail_headers():
     )
     direct, _, _, flags = _desc_scan_tables(simple_mode)
     assert "no_detail_headers" in flags, flags
+
+
+def test_revenue_by_brand_shuffles_fact_rows_once(spark):
+    """On a single-row-group lineitem the layout heal hashes on
+    l_orderkey, the per-(brand, order) aggregate's key, so that
+    aggregate has no exchange of its own and the spread carries no
+    round-robin sort: the heal, the brand rollup and the result sort
+    are the plan's only shuffles."""
+    from big_data_analytics_final_project_spark.operators.spread import (
+        effective_scan_splits,
+    )
+    from big_data_analytics_final_project_spark.sources import load_table
+
+    n = spark.sparkContext.defaultParallelism
+    lineitem = load_table(spark, SF_SMOKE, "lineitem")
+    assert effective_scan_splits(lineitem) < n // 2  # the heal fires
+    df = _df(spark, "revenue_by_brand")
+    plan = physical_plan(df, "simple")
+    assert "RoundRobinPartitioning" not in plan
+    assert re.search(rf"Exchange hashpartitioning\(l_orderkey#\d+L, {n}\)", plan)
+    assert not re.search(r"Exchange hashpartitioning\(p_brand#\d+, l_orderkey", plan)
+    assert count_shuffles(df) == 3
+
+
+def test_also_bought_pairs_one_exchange_below_join(spark):
+    """The (order, product) items are hashed on the order key before
+    the dedup, so the dedup and both sides of a shuffled self-join
+    share one exchange (the second side reuses it). Broadcasts are
+    off so the fixture plans the join that large inputs get."""
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = _df(spark, "also_bought_pairs")
+        df.collect()
+    finally:
+        spark.conf.set(key, before)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    # executed shuffles under the join; a ReusedExchange line is the
+    # second side reading the first side's output
+    below = [
+        ln
+        for ln in final[final.index("SortMergeJoin") :].splitlines()
+        if re.match(r"^[\s:|+-]*Exchange ", ln)
+    ]
+    assert len(below) == 1, below
+    assert re.search(rf"hashpartitioning\(order_id#\d+L, {n}\)", below[0]), below
+
+
+@pytest.mark.parametrize("name", ["engagement_vs_spend", "segment_counts"])
+def test_integrated_pair_one_statement(spark, name):
+    """Each of the integrated pair is one statement over one per-user
+    relation: events and orders are scanned once each, and a warm run
+    launches at most 5 jobs (10 and 9 when the thresholds were a
+    second aggregate branch broadcast back)."""
+    from big_data_analytics_final_project_spark.plans import (
+        executed_scan_counts,
+    )
+
+    from .conftest import require_classic
+
+    require_classic(spark)
+    spark.catalog.clearCache()
+    _df(spark, name).collect()  # first-use table loads are not the query's
+    sc = spark.sparkContext
+    group = f"integrated-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        _, scans = executed_scan_counts(spark, lambda: _df(spark, name).collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert scans == {"events": 1, "orders": 1}, dict(scans)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 5, len(jobs)

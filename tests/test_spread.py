@@ -6,6 +6,7 @@ an unchanged plan."""
 from __future__ import annotations
 
 import os
+import re
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -70,8 +71,25 @@ def test_heal_passthrough_on_wide_layout(spark, wide_path):
     df = spark.read.parquet(wide_path)
     healed = heal_scan_width(df)
     assert healed is df  # untouched frame, not just an equal plan
+    assert heal_scan_width(df, "k") is df
 
 
 def test_heal_passthrough_on_non_scan(spark):
     local = spark.createDataFrame([(1,)], "a: bigint")
     assert heal_scan_width(local) is local
+
+
+def test_keyed_heal_hashes_on_the_key(spark, narrow_path):
+    """A keyed heal spreads by a hash on the key the next operator
+    shuffles on, so that operator needs no exchange of its own; it
+    plans no round-robin (whose retry-safety sort is its main cost)."""
+    df = spark.read.parquet(narrow_path)
+    healed = heal_scan_width(df, "k")
+    n = spark.sparkContext.defaultParallelism
+    plan = healed._jdf.queryExecution().executedPlan().toString()
+    assert re.search(rf"Exchange hashpartitioning\(k#\d+L, {n}\)", plan), plan
+    assert "RoundRobinPartitioning" not in plan
+    agg = healed.groupBy("k", "v").count()
+    agg_plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning", agg_plan)) == 1, agg_plan
+    assert sorted(r.k for r in healed.collect()) == list(range(1000))
