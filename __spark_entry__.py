@@ -1,13 +1,15 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Plain-session entry point over the named-query registry.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` runs the flagship query, ``queries()`` maps every
+registered name to its ``(spark, sf_dir) -> DataFrame`` callable and
+``oracle_sql()`` maps every query that has one to its DuckDB oracle,
+all in ``all_queries()`` order. `scripts/driver_posture_smoke.py`
+drives these on a plain session (no tuned configuration) to check
+that each query runs and returns hashable rows.
 
 The real registry lives in
 ``big_data_analytics_final_project_spark.queries``; this module only
-adapts it to the driver's shape.
+adapts it to that shape.
 """
 
 from __future__ import annotations
@@ -16,25 +18,21 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_analytics_final_project_spark.queries import grading_order
+from big_data_analytics_final_project_spark.queries import all_queries
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (pricing_summary vertical slice) on sf0.001."""
-    specs = grading_order()
-    return specs["pricing_summary"].fn(spark, "/root/testdata/sf0.001")
+    return all_queries()["pricing_summary"].fn(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # grading_order, not all_queries: the driver checks the first 50
-    # entries, so the rotation curated in GRADING_PRIORITY applies here
-    # (and only here — library consumers keep stable merge order).
-    return {name: spec.fn for name, spec in grading_order().items()}
+    return {name: spec.fn for name, spec in all_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: spec.sql
-        for name, spec in grading_order().items()
+        for name, spec in all_queries().items()
         if spec.sql is not None
     }

@@ -192,38 +192,43 @@ def guarded_div(num: Column, den: Column, default: float = 0.0) -> Column:
     return F.when(den > 0, num / den).otherwise(F.lit(default))
 
 
-def corr_components(x: Column, y: Column) -> list[Column]:
+def corr_components(x: Column, y: Column, prefix: str = "") -> list[Column]:
     """Decimal moment sums for a deterministic Pearson correlation.
 
     Inputs are first snapped to DECIMAL(18,6); the second moments are
     then exact decimal×decimal products — casting the *double product*
     would re-round differently per engine at the last decimal.
+    `prefix` names the output columns, so several moment sets can share
+    one aggregate (one pass over its input).
     """
     dec = "decimal(18,6)"
     xd, yd = x.cast(dec), y.cast(dec)
     return [
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(xd).cast("double").alias("_sx"),
-        F.sum(yd).cast("double").alias("_sy"),
-        F.sum(xd * xd).cast("double").alias("_sxx"),
-        F.sum(yd * yd).cast("double").alias("_syy"),
-        F.sum(xd * yd).cast("double").alias("_sxy"),
+        F.count(F.lit(1)).alias(f"{prefix}_n"),
+        F.sum(xd).cast("double").alias(f"{prefix}_sx"),
+        F.sum(yd).cast("double").alias(f"{prefix}_sy"),
+        F.sum(xd * xd).cast("double").alias(f"{prefix}_sxx"),
+        F.sum(yd * yd).cast("double").alias(f"{prefix}_syy"),
+        F.sum(xd * yd).cast("double").alias(f"{prefix}_sxy"),
     ]
 
 
-def corr_from_components(alias: str) -> Column:
+def corr_from_components(alias: str, prefix: str = "") -> Column:
     """Assemble Pearson r from `corr_components` output columns.
 
     Degenerate inputs (n<2 or zero variance) yield 0.0, matching the
     reference's guard (integrated_query_engagement_vs_spend.py:127-133)
     rather than SQL NULL.
     """
-    n = F.col("_n").cast("double")
-    num = n * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    varx = n * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    vary = n * F.col("_syy") - F.col("_sy") * F.col("_sy")
+    def c(name: str) -> Column:
+        return F.col(f"{prefix}{name}")
+
+    n = c("_n").cast("double")
+    num = n * c("_sxy") - c("_sx") * c("_sy")
+    varx = n * c("_sxx") - c("_sx") * c("_sx")
+    vary = n * c("_syy") - c("_sy") * c("_sy")
     return (
-        F.when((F.col("_n") < 2) | (varx <= 0) | (vary <= 0), F.lit(0.0))
+        F.when((c("_n") < 2) | (varx <= 0) | (vary <= 0), F.lit(0.0))
         .otherwise(num / F.sqrt(varx * vary))
         .alias(alias)
     )

@@ -29,7 +29,7 @@ _log = logging.getLogger(__name__)
 # Default for operators whose result materialization is optional
 # (pagerank, triangle_count): True = checkpoint the result and release
 # the loop-invariant persisted frames (the production posture). Plan
-# tooling (scripts/dump_plans.py) flips this to False via
+# tooling (scripts/dump_query_plan.py) flips this to False via
 # ``lazy_results`` so the dumped plans show the real join/aggregate
 # shapes instead of an opaque post-checkpoint RDD scan. The override
 # is THREAD-LOCAL (r12 verdict finding #3): a lazy_results scope on
@@ -53,7 +53,7 @@ def resolve_materialize(flag: bool | None) -> bool:
 def lazy_results():
     """Scoped ``materialize=False`` default for plan tooling.
 
-    Every plan-inspection site (scripts/dump_plans.py, plans/lint.py,
+    Every plan-inspection site (scripts/dump_query_plan.py, plans/lint.py,
     the plan-shape tests) needs the same flip-and-restore;
     centralizing it here means none of them can forget the restore.
     The override lives in a thread-local, so concurrent operator

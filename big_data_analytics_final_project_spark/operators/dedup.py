@@ -307,7 +307,7 @@ def jaccard_pairs_collapsed(
     """`jaccard_pairs` with exact duplicates collapsed FIRST — the
     production composition for duplicate-heavy corpora.
 
-    The r8 scale smoke (SCALE_r08.md) measured why this matters: on a
+    A 10x scale smoke (commit 47f0318) measured why this matters: on a
     10x-replicated corpus every doc gains 9 verbatim copies, the true
     pair set grows ~1000x, and a pair-listing operator is lower-bounded
     by its output — plain `jaccard_pairs` paid 29x runtime emitting it.

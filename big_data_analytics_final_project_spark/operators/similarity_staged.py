@@ -4,19 +4,11 @@
 drain playbook (operators/dedup.py, tests/test_dedup_drain.py) applied
 to the embeddings zone.
 
-Why a sibling module instead of editing `similarity.py` in place: the
-drain lands in a round whose grading window has room for exactly the
-two queries it changes (`ann_ivf`, `embedding_near_dup`); an edit to
-`similarity.py` itself would cascade the deep fingerprints of every
-OTHER similarity query (`knn_bruteforce`, `ann_hyperplane_lsh`,
-`media_feature_knn`) into the same 50-slot window, which is full. The
-lazy shapes stay in `similarity.py` untouched and serve as the
-row-identity twins (tests/test_similarity_drain.py). The duplicated
-join machinery is the accepted price of that isolation; the round the
-similarity family is next force-rotated anyway (r19, with
-`dedup_semantic_clusters`' matching drain), these variants fold back
-into `similarity.py` as a `materialize` flag and this module goes
-away.
+The lazy shapes in `similarity.py` serve as the row-identity twins
+(tests/test_similarity_drain.py). The join machinery is duplicated
+between the two modules; folding these variants back into
+`similarity.py` as a `materialize` flag, and deleting this module, is
+open work.
 
 The drained physical contract, pinned per pytest run: TWO embeddings
 scans per query execution —

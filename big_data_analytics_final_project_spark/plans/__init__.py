@@ -79,8 +79,8 @@ def executed_scan_counts(spark, run, extras=None):
 
     ``extras``, if a dict, additionally receives exact EXECUTED node
     counts summed the same dedup-safe way (AQE-final trees only,
-    cached recipes once): ``shuffles`` (Exchange nodes — the count
-    PLANS.md's static census can't see inside checkpoint stages),
+    cached recipes once): ``shuffles`` (Exchange nodes — the count a
+    static plan census can't see inside checkpoint stages),
     ``broadcasts`` (BroadcastExchange nodes), and
     ``reused_exchanges`` (ReusedExchange / ReusedQueryStage reference
     nodes — each marks a shuffle or broadcast the engine SKIPPED by

@@ -3,8 +3,9 @@
 Every capability from SURVEY.md §2 (plus the large-scale pipeline
 extensions) is exposed as a named query: a callable
 ``(spark, sf_dir) -> DataFrame`` plus, where SQL-expressible, a DuckDB
-oracle string with identical column aliases. `__spark_entry__` re-exports
-this registry to the driver.
+oracle string with identical column aliases. `all_queries()` merges
+the family modules in a fixed order; `__spark_entry__` exposes that
+order unchanged.
 """
 
 from __future__ import annotations
@@ -21,181 +22,6 @@ class QuerySpec:
 
     fn: Callable[[SparkSession, str], DataFrame]
     sql: str | None = None
-
-
-# The grading driver checks the FIRST 50 entries of the driver-facing
-# registry (`__spark_entry__.queries()`) per round, so that iteration
-# order is the grading surface.
-#
-# ROTATION SCHEDULE (3-round cadence — round-6 verdict #2): with 147
-# registered queries and a 50-row window, 2-round full coverage is
-# arithmetically impossible; the policy is therefore: every NON-EXEMPT
-# query gets a green driver row at least every THREE rounds (the
-# ROTATION_EXEMPT differential twins below are carried by their
-# partner's row + pytest instead). scripts/grading_manifest.py
-# enforces it mechanically: (a) anything whose latest green row would
-# fall 3+ rounds old MUST be in this round's window, (b) a one-round
-# simulation proves the NEXT round's forced set also fits in 50, and
-# (c) a greedy multi-round horizon replay reports the sustainable
-# new-registration rate. The budget is whatever that replay measures
-# (`python scripts/grading_manifest.py` "capacity:" line — 1 NEW
-# query/round after r12's five registrations grew the rotating set
-# to 143); author in round N with a commented QUERIES line + parity
-# tests, register when a window has slots.
-#
-# Window composition each round, in order: (1) every query whose
-# implementation or oracle is new or changed this round (fingerprint
-# gate); (2) every query whose latest green driver row is 2 rounds
-# old (staleness gate); (3) r[N-2]-green backfill to fill remaining
-# slots, heaviest/flagship shapes first, which smooths the next
-# round's forced load.
-#
-# Round-17 instance — ROTATION WINDOW + THE EMBEDDINGS-TRIO DRAIN
-# (first two of three). The forced set (49) is the staleness sweep
-# r18 (optimization round 2/2): the OPERATOR-EDIT CASCADE round. The
-# round's rewrites live in shared operator modules (multimodal's
-# media revert + pre-synthesis spread, dedup's jaccard drain, bpe's
-# two-level training, lm's lazy checkpoints + broadcast gate,
-# profile's stats fold, spread.py's heal imported by batch/text/
-# bloomjoin consumers), so the deep fingerprints force 47 queries —
-# every one of them is in this window (the r17 verdict's #3:
-# changed-but-unverified code must not ship again; that covers
-# doc_lm_perplexity, corpus_bpe_encode/merges, zone_zorder_prune,
-# embedding_kmeans, ann_ivf — the r17 post-freeze rewrites now
-# driver-graded on final code). The 3 remaining slots take the
-# stalest due names. 44 r15-green entries are scheduled debt for the
-# r19 rotation (the manifest CLI's overflow/recovery sections show
-# the debt clearing; its one-round lookahead gate necessarily reads
-# over-budget this round — an optimization round that touches 7
-# operator modules cannot also retire a 47-entry staleness cohort in
-# the same 50 slots).
-GRADING_PRIORITY: tuple[str, ...] = (
-    # -- forced: every fingerprint-changed query this round --
-    "ann_hyperplane_lsh",
-    "ann_ivf",
-    "binary_meta",
-    "bloom_pruned_revenue",
-    "corpus_bpe_encode",
-    "corpus_bpe_merges",
-    "corpus_curation_report",
-    "corpus_overlap_kmv",
-    "customer_k_anonymity",
-    "customer_spend_deciles",
-    "dedup_clusters",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_jaccard_collapsed",
-    "dedup_jaccard_pairs",
-    "dedup_minhash_lsh",
-    "dedup_overlap_pairs",
-    "dedup_semantic_clusters",
-    "dedup_simhash",
-    "doc_dedup_survivors",
-    "doc_lm_perplexity",
-    "doc_quality_score",
-    "doc_repetition_stats",
-    "doc_unigram_entropy",
-    "embedding_kmeans",
-    "embedding_near_dup",
-    "knn_bruteforce",
-    "lineitem_profile",
-    "media_avi_frames",
-    "media_feature_knn",
-    "media_frame_sample",
-    "media_gif_pixels",
-    "media_png_dims",
-    "media_png_pixels",
-    "media_wav_meta",
-    "media_wav_rms",
-    "order_totals_reconciliation",
-    "orders_profile_drift",
-    "pricing_summary",
-    "pricing_summary_sparksql",
-    "referential_integrity_audit",
-    "report_csv_roundtrip",
-    "revenue_by_brand",
-    "revenue_by_brand_salted",
-    "revenue_by_brand_sparksql",
-    "zone_roundtrip_daily",
-    "zone_zorder_prune",
-    # -- stalest-due backfill --
-    "corpus_mix_plan",
-    "corpus_split_assign",
-    "customer_order_history",
-    # ---- driver's 50-entry window ends here ----
-)
-
-# CAPACITY POLICY (decided round 9, per the round-8 verdict's "decide,
-# don't defer"; extended round 13 per the r12 verdict #5): two classes
-# of query are exempt from the 3-round STALENESS rotation. Exempt
-# queries in both classes:
-#   - STAY registered (the judge still sees them in queries()/oracle_sql,
-#     and the driver still grades them whenever they sit in the window);
-#   - STILL trip the fingerprint gate — any source/oracle change puts
-#     them back in the next window (scripts/grading_manifest.py; from
-#     round 13 the fingerprint also folds in every non-query package
-#     module in the query's transitive import closure);
-#   - are STILL held to their oracle every round by the local pytest
-#     parity sweep (tests/test_oracle_parity.py);
-#   - are simply never FORCED by staleness.
-#
-# Class 1 — DIFFERENTIAL TWINS (round 9): shares another registered
-# query's DuckDB oracle VERBATIM, and the per-round pytest oracle
-# sweep holds BOTH queries against that one oracle — hash-matching the
-# same relation proves the pair row-identical to each other every
-# round. A driver row for the twin adds no evidence beyond its
-# partner's row + the pytest proof.
-DIFFERENTIAL_TWIN_EXEMPT: frozenset[str] = frozenset(
-    {
-        # twin of revenue_by_brand (salting differential; same oracle)
-        "revenue_by_brand_salted",
-        # twin of user_spend (salting differential; same oracle)
-        "user_spend_salted",
-        # twin of pricing_summary via spark.sql door (same oracle)
-        "pricing_summary_sparksql",
-        # twin of revenue_by_brand via spark.sql door (same oracle)
-        "revenue_by_brand_sparksql",
-        # twin of also_bought_pairs via array HOFs (same oracle)
-        "pairs_via_hof",
-        # twin of corpus_bigram_topk via UDTF (same oracle)
-        "corpus_bigram_topk_udtf",
-        # twin of dedup_jaccard_pairs, collapse-first plan (same oracle)
-        "dedup_jaccard_collapsed",
-        # twin of top_order_per_customer via max_by aggregation instead
-        # of the ranking window (same oracle)
-        "top_order_per_customer_agg",
-        # twin of events_props_parse via the VARIANT type (same oracle)
-        "events_props_variant",
-    }
-)
-
-# Class 2 — CONSTANT-INPUT queries (round 13, the r12 verdict's #5
-# capacity buy-back): the gen_* family reads NO sf_dir data — its
-# input IS the deterministic generator (md5-uniform draws at fixed
-# cardinalities), so the driver-graded relation is a PURE FUNCTION of
-# package code. Staleness cannot occur: a green row + an unchanged
-# transitive fingerprint (which now covers generator.py) means the
-# re-run would be bit-identical; re-grading every 3 rounds spends
-# slots re-proving a hash of constants. The fingerprint gate — not
-# the staleness clock — is the correct re-grade trigger, and any edit
-# to generator.py or the query forces the whole family back into the
-# next window. Enforced mechanically: the fn body must never
-# reference sf_dir and must carry a full SQL oracle
-# (_check_rotation_exempt).
-CONSTANT_INPUT_EXEMPT: frozenset[str] = frozenset(
-    {
-        "gen_transactions_flat",
-        "gen_revenue_by_category",
-        "gen_engagement_vs_spend",
-        "gen_top_spenders",
-        "gen_product_popularity",
-        "gen_also_bought_pairs",
-    }
-)
-
-ROTATION_EXEMPT: frozenset[str] = (
-    DIFFERENTIAL_TWIN_EXEMPT | CONSTANT_INPUT_EXEMPT
-)
 
 
 def all_queries() -> dict[str, QuerySpec]:
@@ -235,82 +61,5 @@ def all_queries() -> dict[str, QuerySpec]:
             if name in merged:
                 raise ValueError(f"duplicate query name: {name}")
             merged[name] = spec
-    _check_rotation_exempt(merged)
     return merged
 
-
-def _uses_sf_dir(fn) -> bool:
-    """True if the fn BODY references sf_dir (docstrings don't count —
-    they're Constant nodes, not Names)."""
-    import ast
-    import inspect
-    import textwrap
-
-    try:
-        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
-    except (OSError, TypeError, SyntaxError):
-        return True  # unverifiable — treat as data-dependent
-    fdef = tree.body[0]
-    return any(
-        isinstance(node, ast.Name) and node.id == "sf_dir"
-        for stmt in fdef.body
-        for node in ast.walk(stmt)
-    )
-
-
-def _check_rotation_exempt(merged: dict[str, QuerySpec]) -> None:
-    """Mechanically enforce each exemption class's qualifying
-    condition — otherwise a query added to a set without actually
-    qualifying silently escapes the 3-round grading cadence.
-
-    Differential twins: must share their DuckDB oracle VERBATIM with
-    some non-exempt registered query (the differential pytest holding
-    both twins to the shared oracle is tests/test_oracle_parity.py's
-    full-registry sweep).
-
-    Constant-input: the fn body must never reference sf_dir (so the
-    result is a pure function of package code — the AST check ignores
-    docstrings) and must carry a full SQL oracle (so whenever the
-    fingerprint gate DOES window it, the driver fully grades it)."""
-    unknown = ROTATION_EXEMPT - merged.keys()
-    if unknown:
-        raise ValueError(f"ROTATION_EXEMPT names unknown queries: {sorted(unknown)}")
-    data_dependent = [
-        name
-        for name in sorted(CONSTANT_INPUT_EXEMPT)
-        if merged[name].sql is None or _uses_sf_dir(merged[name].fn)
-    ]
-    if data_dependent:
-        raise ValueError(
-            "CONSTANT_INPUT_EXEMPT queries whose body reads sf_dir or "
-            f"that lack a SQL oracle: {data_dependent}"
-        )
-    partner_oracles = {
-        spec.sql
-        for name, spec in merged.items()
-        if name not in ROTATION_EXEMPT and spec.sql is not None
-    }
-    orphans = [
-        name
-        for name in sorted(DIFFERENTIAL_TWIN_EXEMPT)
-        if merged[name].sql is None or merged[name].sql not in partner_oracles
-    ]
-    if orphans:
-        raise ValueError(
-            "DIFFERENTIAL_TWIN_EXEMPT queries whose oracle is not shared "
-            f"verbatim with a non-exempt registered partner: {orphans}"
-        )
-
-
-def grading_order() -> dict[str, QuerySpec]:
-    """The registry reordered for the grading driver: GRADING_PRIORITY
-    first, everything else after in module-merge order. Library
-    consumers (bench, reports, plan dumps) use `all_queries()` — its
-    stable merge order is not a grading concern."""
-    merged = all_queries()
-    missing = [n for n in GRADING_PRIORITY if n not in merged]
-    if missing:
-        raise ValueError(f"GRADING_PRIORITY names unknown queries: {missing}")
-    ordered = {n: merged[n] for n in GRADING_PRIORITY}
-    ordered.update((n, s) for n, s in merged.items() if n not in ordered)
-    return ordered

@@ -66,8 +66,8 @@ def dedup_jaccard_collapsed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the duplicate groups with output-bounded joins. Same threshold,
     same shingling, ROW-IDENTICAL output — so it shares
     `dedup_jaccard_pairs`' oracle verbatim, a differential proof that
-    two structurally different plans agree bit-for-bit. The r8 scale
-    smoke (SCALE_r08.md) measured the point: 16x faster on a
+    two structurally different plans agree bit-for-bit. A 10x scale
+    smoke (commit 47f0318) measured the point: 16x faster on a
     10x-replicated corpus because candidate cost stops growing with
     the duplication factor."""
     return jaccard_pairs_collapsed(
@@ -238,11 +238,9 @@ QUERIES: dict[str, QuerySpec] = {
     "dedup_jaccard_pairs": QuerySpec(
         dedup_jaccard_q, jaccard_pairs_sql(JACCARD_THRESHOLD, use_shingles=True)
     ),
-    # registered r9 (authored-and-parity-tested in r8; window was full
-    # — tests/test_dedup_collapsed.py held it row-identical to
-    # dedup_jaccard_pairs against the SAME oracle since). ROTATION_EXEMPT
-    # after its first graded round: it shares its twin's oracle verbatim,
-    # so the differential pytest + the twin's driver rows carry it.
+    # differential twin of dedup_jaccard_pairs: the same oracle, so the
+    # parity sweep holds the two row-identical (and
+    # tests/test_dedup_collapsed.py pins the collapse-first plan).
     "dedup_jaccard_collapsed": QuerySpec(
         dedup_jaccard_collapsed_q,
         jaccard_pairs_sql(JACCARD_THRESHOLD, use_shingles=True),

@@ -23,32 +23,23 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from ..streaming.rollup import WARMUP, Z_THRESH, score_hourly_anomalies
 from . import QuerySpec
 from .text import _QLOG_LUT, _QLOG_SCALE, _qlog2_nano_col, _qlog2_nano_sql
 
-_WARMUP = 12  # trailing buckets required before a z-score is judged
-_Z_THRESH = 3.0
 _N_BINS = 10
 _PSI_DRIFT_BITS = 0.25  # ~0.17 nats; conventional "action" PSI ~ 0.25
 
 
 def events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-window z-score anomaly detection on hourly event
-    volume: each hour's count is judged against the mean/stddev of the
-    24 trailing hourly buckets (self-excluded — ROWS BETWEEN 24
-    PRECEDING AND 1 PRECEDING — so a spike can't dilute its own
-    baseline), with a 12-bucket warm-up before anything is flagged.
-    A zero-variance baseline leaves z NULL, but any deviation from a
-    perfectly flat window still flags (infinite-sigma case). Hours
-    with ZERO events never materialize a row (the frame is observed
-    hours, not a calendar spine) — to catch outage-shaped anomalies,
-    compose with the `events_gap_filled_hourly` spine first.
-
-    Exactness: the trailing sum and sum-of-squares are BIGINT window
-    aggregates over exact counts; variance comes from the integer
-    numerator n·Σx² − (Σx)² (no float cancellation), and the closing
-    mean/z expressions are the same fixed-order IEEE double ops on
-    both engines, so even the doubles hash-match.
+    volume: the hourly count aggregate of the event log, scored by
+    `streaming.rollup.score_hourly_anomalies` (24 self-excluded
+    trailing buckets, `WARMUP`-bucket warm-up, flat-window
+    infinite-sigma flag; exact BIGINT window sums). Hours with ZERO
+    events never materialize a row (the frame is observed hours, not
+    a calendar spine) — to catch outage-shaped anomalies, compose
+    with the `events_gap_filled_hourly` spine first.
 
     Scale: the event-level aggregation is a distributed hash agg (one
     shuffle); the trailing window then runs over the HOURLY frame —
@@ -59,44 +50,7 @@ def events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-
-    w = Window.orderBy("hour").rowsBetween(-24, -1)
-    n = F.col("n_events")
-    s = F.sum("n_events").over(w).alias("s")
-    sq = F.sum(n * n).over(w).alias("sq")
-    cnt = F.count("n_events").over(w).alias("n_trail")
-    t = hourly.select("hour", "n_events", cnt, s, sq)
-
-    var_num = F.col("n_trail") * F.col("sq") - F.col("s") * F.col("s")
-    mean = F.when(
-        F.col("n_trail") > 0,
-        F.col("s").cast("double") / F.col("n_trail"),
-    )
-    z = F.when(
-        (F.col("n_trail") >= _WARMUP) & (var_num > 0),
-        (n.cast("double") - F.col("s").cast("double") / F.col("n_trail"))
-        / F.sqrt(
-            var_num.cast("double")
-            / (F.col("n_trail") * F.col("n_trail")).cast("double")
-        ),
-    )
-    # zero-variance baseline: z is undefined (NULL), but ANY deviation
-    # from a perfectly flat trailing window is infinite-sigma — flag it
-    flat_dev = (
-        (F.col("n_trail") >= _WARMUP)
-        & (var_num == 0)
-        & (n * F.col("n_trail") != F.col("s"))
-    )
-    return t.select(
-        "hour",
-        "n_events",
-        "n_trail",
-        mean.alias("trail_mean"),
-        z.alias("z"),
-        (F.coalesce(F.abs(z) > _Z_THRESH, F.lit(False)) | flat_dev).alias(
-            "is_anomaly"
-        ),
-    ).orderBy("hour")
+    return score_hourly_anomalies(hourly)
 
 
 EVENTS_HOURLY_ANOMALY_SQL = f"""
@@ -117,18 +71,18 @@ SELECT CAST(hour AS TIMESTAMP) AS hour,
        n_trail,
        CASE WHEN n_trail > 0
             THEN CAST(s AS DOUBLE) / n_trail END AS trail_mean,
-       CASE WHEN n_trail >= {_WARMUP} AND (n_trail * sq - s * s) > 0
+       CASE WHEN n_trail >= {WARMUP} AND (n_trail * sq - s * s) > 0
             THEN (CAST(n_events AS DOUBLE) - CAST(s AS DOUBLE) / n_trail)
                  / sqrt(CAST(n_trail * sq - s * s AS DOUBLE)
                         / CAST(n_trail * n_trail AS DOUBLE))
        END AS z,
        coalesce(abs(
-         CASE WHEN n_trail >= {_WARMUP} AND (n_trail * sq - s * s) > 0
+         CASE WHEN n_trail >= {WARMUP} AND (n_trail * sq - s * s) > 0
               THEN (CAST(n_events AS DOUBLE) - CAST(s AS DOUBLE) / n_trail)
                    / sqrt(CAST(n_trail * sq - s * s AS DOUBLE)
                           / CAST(n_trail * n_trail AS DOUBLE))
-         END) > {_Z_THRESH}, FALSE)
-       OR (n_trail >= {_WARMUP} AND (n_trail * sq - s * s) = 0
+         END) > {Z_THRESH}, FALSE)
+       OR (n_trail >= {WARMUP} AND (n_trail * sq - s * s) = 0
            AND n_events * n_trail != s) AS is_anomaly
 FROM t
 ORDER BY hour

@@ -403,14 +403,17 @@ def engagement_spend_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     `pearson_corr` (integrated_query_engagement_vs_spend.py:121-133,
     227-228), built from exact decimal moment sums so the result is
     partitioning-independent (see functions/numeric.py). Degenerate
-    input → 0.0, matching the reference's guard."""
+    input → 0.0, matching the reference's guard. Both moment sets are
+    one aggregate, so the per-user relation (and events) is read once."""
     joined = _per_user(spark, sf_dir, "SELECT * FROM joined WHERE total_spent > 0")
     spent = F.col("total_spent")
-    comp1 = joined.agg(*corr_components(spent, F.col("sessions_count").cast("double")))
-    comp2 = joined.agg(*corr_components(spent, F.col("total_duration")))
-    c1 = comp1.select(corr_from_components("corr_spent_sessions"))
-    c2 = comp2.select(corr_from_components("corr_spent_duration"))
-    return c1.crossJoin(c2)
+    return joined.agg(
+        *corr_components(spent, F.col("sessions_count").cast("double"), "s"),
+        *corr_components(spent, F.col("total_duration"), "d"),
+    ).select(
+        corr_from_components("corr_spent_sessions", "s"),
+        corr_from_components("corr_spent_duration", "d"),
+    )
 
 
 ENGAGEMENT_SPEND_CORRELATION_SQL = f"""

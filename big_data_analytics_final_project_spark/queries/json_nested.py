@@ -142,8 +142,8 @@ def nested_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, x: acc + x["price"].cast(DEC),
     ).cast("double")
     # part_keys is serialized (array_join), not emitted as a raw array:
-    # the driver's pandas canonicalization cannot sort/hash list cells
-    # ("unhashable type: list" — CORRECTNESS_r03), and a delimited
+    # a pandas canonicalization cannot sort/hash list cells
+    # ("unhashable type: list"), and a delimited
     # string proves the same ARR-1 field-path extraction.
     return nested.select(
         "l_orderkey",

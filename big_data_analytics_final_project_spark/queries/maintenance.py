@@ -645,24 +645,7 @@ QUERIES: dict[str, QuerySpec] = {
     "zone_roundtrip_daily": QuerySpec(
         zone_roundtrip_daily, ZONE_ROUNDTRIP_DAILY_SQL
     ),
-    # r19 queue (COVERAGE.md; budget 1 registration/round): the
-    # bucketed co-located join layout under the oracle, authored r15 —
-    # "bucketed_segment_spend": QuerySpec(
-    #     bucketed_segment_spend, BUCKETED_SEGMENT_SPEND_SQL
-    # ),
-    # r18 queue (COVERAGE.md; budget 1 registration/round): the
-    # small-file compaction path under the oracle, authored r15 —
-    # "zone_compaction_roundtrip": QuerySpec(
-    #     zone_compaction_roundtrip, ZONE_COMPACTION_ROUNDTRIP_SQL
-    # ),
-    # r20 queue (COVERAGE.md; budget 1 registration/round): the ORC
-    # zone roundtrip under the oracle, authored r16 —
-    # "zone_orc_roundtrip": QuerySpec(
-    #     zone_orc_roundtrip, ZONE_ORC_ROUNDTRIP_SQL
-    # ),
-    # registered r16 (authored + parity-tested r14; held by the
-    # 1-registration/round rotation budget): the z-order layout path
-    # under the oracle.
+    # the z-order layout path under the oracle
     "zone_zorder_prune": QuerySpec(
         zone_zorder_prune, ZONE_ZORDER_PRUNE_SQL
     ),

@@ -526,12 +526,9 @@ QUERIES: dict[str, QuerySpec] = {
     "order_totals_reconciliation": QuerySpec(
         order_totals_reconciliation, ORDER_TOTALS_RECONCILIATION_SQL
     ),
-    # registered r12 (authored+parity-tested r9 at both scales,
-    # tests/test_profile.py; deferred since r10 by full windows) —
+    # the profile family is also parity-tested at both scales in
+    # tests/test_profile.py —
     "lineitem_profile": QuerySpec(lineitem_profile, LINEITEM_PROFILE_SQL),
-    # registered r13 (authored r11, parity-tested at both scales in
-    # tests/test_profile.py; the constant-input exemption freed the
-    # slots — queries/__init__.py CONSTANT_INPUT_EXEMPT) —
     "customer_k_anonymity": QuerySpec(
         customer_k_anonymity, CUSTOMER_K_ANONYMITY_SQL
     ),

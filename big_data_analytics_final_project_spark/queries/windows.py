@@ -1334,9 +1334,8 @@ ORDER BY p.event_id
 
 
 QUERIES: dict[str, QuerySpec] = {
-    # registered r17 (authored + parity-tested r14, tests/test_scd2.py;
-    # held since by the 1-registration/round window budget — COVERAGE.md
-    # r15/r16 pointers): the point-in-time SCD2 feature join —
+    # the point-in-time SCD2 feature join (also held against its
+    # oracle in tests/test_scd2.py) —
     "purchase_pit_order_status": QuerySpec(
         purchase_pit_order_status, PURCHASE_PIT_ORDER_STATUS_SQL
     ),

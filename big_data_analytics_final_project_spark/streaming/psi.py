@@ -1,4 +1,4 @@
-"""Standing PSI monitor: the streaming form of the graded
+"""Standing PSI monitor: the streaming form of
 `queries.drift.segment_value_psi`.
 
 The batch query defines its reference period ad hoc (first half of
@@ -11,15 +11,14 @@ against the frozen side. Per-trigger cost is the bin frame
 (|types|·n_bins rows), never the event volume; the event-scale work
 is the per-micro-batch bucket-count, map-side combinable.
 
-The binning and scoring expressions REPLICATE the graded query's
+The binning and scoring expressions REPLICATE the batch query's
 (integer-micro equal-width bins, +1 smoothing with empty bins folded
 in analytically, qlog2 via the broadcast `_QLOG_LUT` frame,
-DECIMAL-exact PSI terms): that function's source is
-fingerprint-frozen between grading windows, so it cannot be
-refactored into shared helpers mid-cycle —
-tests/test_streaming_psi.py instead holds monitor == graded query on
-the same split, batch AND streamed (the anti-drift guarantee the
-refactor would give; same pattern as `score_hourly_anomalies`).
+DECIMAL-exact PSI terms). Sharing them is open work: the monitor's
+frozen reference side is built differently from the query's ad hoc
+half split, so the two do not reduce to one function call.
+tests/test_streaming_psi.py holds monitor == batch query on the same
+split, batch AND streamed, and guards the copies against drift.
 """
 
 from __future__ import annotations

@@ -11,8 +11,7 @@ STRAIGHT to `histogram_rolling_quantiles` — stream == batch by
 construction (test-pinned, bit-for-bit, the family contract from
 tests/test_streaming_{psi,profile}.py). Unlike the PSI monitor, no
 expression replication is needed: the histogram operators are plain
-package operators, not fingerprint-frozen graded queries, so the
-streaming side simply calls them.
+package operators, so the streaming side simply calls them.
 
 Bounds (lo, hi, n_bins) are frozen monitor config — the same
 fixed-edge requirement the batch operator documents: edges must agree

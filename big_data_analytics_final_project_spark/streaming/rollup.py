@@ -38,6 +38,9 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import DEC
 
+WARMUP = 12  # trailing rows required before a z-score is judged
+Z_THRESH = 3.0
+
 
 def fold_hourly_batch(batch_df: DataFrame, batch_id: int, zone: str) -> None:
     """Merge one micro-batch's hourly partials into the rollup zone —
@@ -99,30 +102,30 @@ def read_hourly_rollup(spark, zone: str) -> DataFrame:
 
 def score_hourly_anomalies(hourly: DataFrame) -> DataFrame:
     """Trailing-window z-score anomaly scoring over an (hour, n_events)
-    frame — the STREAMING-SIDE twin of the graded
-    `queries.drift.events_hourly_anomaly`: score the continuously
-    maintained rollup zone instead of re-aggregating the event log, so
-    the monitor's per-trigger cost is the HOURLY frame (one row per
-    hour), not the event volume. Compose:
+    frame: each hour's count is judged against the mean/stddev of the
+    24 trailing rows (self-excluded, so a spike can't dilute its own
+    baseline), with a `WARMUP`-row warm-up before anything is flagged.
+    A zero-variance baseline leaves z NULL, but any deviation from a
+    perfectly flat window still flags (infinite-sigma case).
+
+    The one scorer for both sides: `queries.drift.events_hourly_anomaly`
+    applies it to the hourly aggregate of the event log, and the
+    streaming monitor applies it to the continuously maintained rollup
+    zone, so the monitor's per-trigger cost is the HOURLY frame (one
+    row per hour), not the event volume:
 
         maintain_hourly_rollup(stream, zone, ckpt)   # standing fold
         score_hourly_anomalies(                       # monitor read
             read_hourly_rollup(spark, zone).select("hour", "n_events"))
 
-    The scoring expressions REPLICATE the graded query's (trailing
-    24-bucket BIGINT sums, self-excluded frame, integer variance
-    numerator n·Σx² − (Σx)², 12-bucket warm-up, flat-window
-    infinite-sigma flag) rather than importing them: the graded
-    function's source is fingerprint-frozen between grading windows
-    (scripts/grading_manifest.py), so it cannot be refactored
-    mid-cycle — tests/test_streaming_anomaly.py instead holds the two
-    row-identical on the same input AND end-to-end (streamed zone →
-    score == batch query), which is the same anti-drift guarantee the
-    refactor would give. The bounded ORDER BY-only window is the
+    Exactness: the trailing sum and sum-of-squares are BIGINT window
+    aggregates over exact counts; variance comes from the integer
+    numerator n·Σx² − (Σx)² (no float cancellation), and the closing
+    mean/z expressions are fixed-order IEEE double ops that DuckDB
+    evaluates identically. The bounded ORDER BY-only window is the
     allowlisted hourly-frame pattern (plans/lint.py)."""
     from pyspark.sql import Window
 
-    warmup, z_thresh = 12, 3.0
     w = Window.orderBy("hour").rowsBetween(-24, -1)
     n = F.col("n_events")
     t = hourly.select(
@@ -137,7 +140,7 @@ def score_hourly_anomalies(hourly: DataFrame) -> DataFrame:
         F.col("n_trail") > 0, F.col("s").cast("double") / F.col("n_trail")
     )
     z = F.when(
-        (F.col("n_trail") >= warmup) & (var_num > 0),
+        (F.col("n_trail") >= WARMUP) & (var_num > 0),
         (n.cast("double") - F.col("s").cast("double") / F.col("n_trail"))
         / F.sqrt(
             var_num.cast("double")
@@ -145,7 +148,7 @@ def score_hourly_anomalies(hourly: DataFrame) -> DataFrame:
         ),
     )
     flat_dev = (
-        (F.col("n_trail") >= warmup)
+        (F.col("n_trail") >= WARMUP)
         & (var_num == 0)
         & (n * F.col("n_trail") != F.col("s"))
     )
@@ -155,7 +158,7 @@ def score_hourly_anomalies(hourly: DataFrame) -> DataFrame:
         "n_trail",
         mean.alias("trail_mean"),
         z.alias("z"),
-        (F.coalesce(F.abs(z) > z_thresh, F.lit(False)) | flat_dev).alias(
+        (F.coalesce(F.abs(z) > Z_THRESH, F.lit(False)) | flat_dev).alias(
             "is_anomaly"
         ),
     ).orderBy("hour")

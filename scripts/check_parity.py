@@ -3,18 +3,10 @@
 session; report all mismatches (does not stop at first). Usage:
 
     python scripts/check_parity.py [sf_dir] [query ...]
-    python scripts/check_parity.py --json PARITY_r07.json [sf_dir]
-
-`--json PATH` additionally writes a machine-readable per-query record
-({name: {status, seconds, error}}) — committed per round as
-PARITY_r{N}.json so queries outside the driver's 50-entry grading
-window carry durable full-registry evidence, not just a green pytest
-(round-6 verdict #6).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
@@ -31,14 +23,6 @@ from tests.parity import compare
 
 def main() -> int:
     argv = [a for a in sys.argv[1:] if a != "--trace"]
-    json_out = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        if i + 1 >= len(argv):
-            print("--json requires a path argument", file=sys.stderr)
-            return 2
-        json_out = argv[i + 1]
-        del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
     only = set(argv[1:])
 
@@ -63,49 +47,24 @@ def main() -> int:
         print(f"unknown queries: {sorted(unknown)}", file=sys.stderr)
         return 2
     failed: list[str] = []
-    records: dict[str, dict] = {}
     for name in sorted(specs):
         if only and name not in only:
             continue
         spec = specs[name]
         if spec.sql is None:
             print(f"SKIP  {name} (no oracle)")
-            records[name] = {"status": "skip", "seconds": None, "error": None}
             continue
         t0 = time.time()
         try:
             compare(spec.fn(spark, sf_dir), con.sql(spec.sql))
-            dt = round(time.time() - t0, 2)
-            print(f"OK    {name} ({dt:.1f}s)")
-            records[name] = {"status": "pass", "seconds": dt, "error": None}
+            print(f"OK    {name} ({time.time() - t0:.1f}s)")
         except Exception as e:  # noqa: BLE001
             failed.append(name)
             msg = str(e).split("\n")
             print(f"FAIL  {name}: " + " | ".join(msg[:6]))
-            records[name] = {
-                "status": "fail",
-                "seconds": round(time.time() - t0, 2),
-                "error": " | ".join(msg[:3])[:500],
-            }
             if "--trace" in sys.argv:
                 traceback.print_exc()
     print(f"\n{len(failed)} failures: {failed}")
-    if json_out:
-        summary = {
-            "sf_dir": sf_dir,
-            # a subset run must be distinguishable from a full-registry
-            # sweep by more than row count (r7 advice)
-            "full_registry": not only,
-            "only": sorted(only) if only else None,
-            "n_pass": sum(1 for r in records.values() if r["status"] == "pass"),
-            "n_fail": len(failed),
-            "n_skip": sum(1 for r in records.values() if r["status"] == "skip"),
-            "queries": records,
-        }
-        with open(json_out, "w") as f:
-            json.dump(summary, f, indent=1, sort_keys=True)
-            f.write("\n")
-        print(f"wrote {json_out}")
     return 1 if failed else 0
 
 

@@ -1,13 +1,13 @@
-"""Run every `queries()` entry on a PLAIN SparkSession — the driver's posture.
+"""Run every `queries()` entry on a PLAIN SparkSession.
 
-The correctness harness that grades this repo builds its OWN
-SparkSession and passes it into `queries()[name](spark, sf_dir)`; none
-of the engine's session.py configuration reaches it. Round 1 lost 18
-of 50 queries to exactly that gap (`spark.sql.legacy.parquet.nanosAsLong`
-lived only in the repo session factory). This smoke re-creates the
-driver's posture: a default session with NO engine confs — only
-performance knobs (shuffle partitions, UI) that cannot mask a
-conf-dependence bug — and executes every registered query.
+A caller of `__spark_entry__` may build its OWN SparkSession and pass
+it into `queries()[name](spark, sf_dir)`; none of the engine's
+session.py configuration reaches it. 18 events-reading queries once
+failed on exactly that gap (`spark.sql.legacy.parquet.nanosAsLong`
+lived only in the repo session factory). This smoke re-creates that
+posture: a default session with NO engine confs — only performance
+knobs (shuffle partitions, UI) that cannot mask a conf-dependence
+bug — and executes every registered query.
 
 Usage:
     python scripts/driver_posture_smoke.py [sf_dir] [query ...]
@@ -55,10 +55,10 @@ def main(argv: list[str]) -> int:
         t0 = time.time()
         try:
             df = fn(spark, sf_dir)
-            # Oracle-graded output must stay pandas-hashable: the
-            # driver's canonicalization sorts result columns, and a raw
+            # Oracle-checked output must stay pandas-hashable: a
+            # pandas canonicalization sorts result columns, and a raw
             # array/map/struct cell kills it with "unhashable type"
-            # (round-3 `nested_order_items`). Serialize such columns
+            # (once `nested_order_items`). Serialize such columns
             # (array_join / to_json) before returning them.
             if name in oracles:
                 bad = [
@@ -70,8 +70,8 @@ def main(argv: list[str]) -> int:
                 ]
                 if bad:
                     raise TypeError(
-                        f"driver-unhashable output columns {bad} in an "
-                        "oracle-graded query"
+                        f"unhashable output columns {bad} in an "
+                        "oracle-checked query"
                     )
             df.limit(5).collect()
             print(f"OK    {name} ({time.time() - t0:.1f}s)", flush=True)

@@ -2,7 +2,7 @@
 """Executed-plan scan audit: run every registered query and count how
 many times the AQE-FINAL plan actually scans each parquet table.
 
-The plan census (PLANS.md) counts STATIC scans — duplicates that
+A static plan census counts planned scans — duplicates that
 ReusedExchange collapses at runtime are fine there. What this audit
 hunts is the opposite failure: duplicate subtrees that AQE does NOT
 collapse (per-branch column pruning, independent join strategies),
@@ -20,7 +20,8 @@ REPORTED (not failed) when some table scans more than once — several
 multi-scans are inherent (self-join sides, TPC-H Q21's EXISTS
 branches, per-FK-edge pruned key scans, persist-fill + post-release
 passes) and carry a reasoned entry in the BASELINE below; anything
-NOT covered is new signal for the next round's plan work.
+NOT covered is new signal for plan work. Executed shuffle counts are
+gated against the pinned sweep in scan_audit_baseline.json (below).
 
 Known overcount: a `.persist()`ed subtree reprints its FileScan in
 every consumer execution's plan description even though the cache
@@ -88,11 +89,6 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     # window columns over the one per-user relation, so events and
     # orders are scanned once each (was 2 and 2: a second aggregate
     # branch pruned differently and re-read both).
-    ("engagement_spend_correlation", {
-        "events": (2, "its two moment aggregates read different "
-                      "per-user columns, so the engagement aggregate "
-                      "prunes differently in each branch"),
-    }),
     ("customer_cohort_setops", {
         "orders": (2, "one scan per disjoint year filter; the distinct "
                       "buyer lists are checkpointed before the set "
@@ -333,37 +329,17 @@ for _name, _entry in _BASELINE_ITEMS:
     BASELINE[_name] = _entry
 
 
-# --- executed-shuffle trend gate (r14 verdict #4) -------------------
+# --- executed-shuffle trend gate ----------------------------------
 # The audit records executed Exchange counts per query; this gate
-# compares them round-over-round against the newest same-sf
-# SCANS_r{N}.json in the repo root, so a rewrite that trades a scan
-# for extra shuffles can't pass silently. A query whose shuffle count
-# is EXPECTED to move this round gets an entry here (the reason is
-# the audit trail); anything else that grows is flagged in the JSON's
-# `shuffle_over` list. New registrations have no prior and simply
-# seed next round's baseline.
-_SHUFFLE_REBASELINE: dict[str, str] = {
-    # r18 width-heals (operators/spread.py): each adds exactly ONE
-    # deliberate round-robin exchange right after a scan whose
-    # single-row-group layout otherwise serializes the map side onto
-    # one core; measured per-query wins in OPTIMIZATION_r18.md. On
-    # multi-row-group zones the gate never fires and the count
-    # returns to its prior. revenue_by_brand has no entry: its heal
-    # hashes on l_orderkey and replaces the per-(brand, order)
-    # aggregate's exchange instead of adding one.
-    "bloom_pruned_revenue": "r18 width-heal: +1 pre-probe exchange",
-    "corpus_bpe_encode": "r18 width-heal: +1 pre-tokenize exchange",
-    "corpus_overlap_kmv": "r18 width-heal: +1 pre-shingle exchange",
-    "doc_quality_score": "r18 width-heal: +1 pre-scoring exchange",
-    "doc_repetition_stats": "r18 width-heal: +1 pre-metrics exchange",
-    "dedup_jaccard_collapsed": (
-        "r18: the nested jaccard_pairs drain (set frame checkpointed "
-        "once, 2->1 documents scans) moves its staging boundary; the "
-        "composed plan's executed exchanges went 7->9 while the "
-        "interleaved A/B runtime stayed flat (1.02 head/control) — "
-        "a bookkeeping move, not a new data shuffle"
-    ),
-}
+# compares them against the pinned sweep in scan_audit_baseline.json,
+# so a rewrite that trades a scan for extra shuffles can't pass
+# silently. A query that grows past its pinned count (plus its
+# measured jitter) is flagged in the JSON's `shuffle_over` list; a new
+# registration has no pinned count and is not gated. To re-pin after a
+# deliberate plan change, run the full sweep with
+# `--json scripts/scan_audit_baseline.json`.
+PINNED = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                      "scan_audit_baseline.json")
 
 # name -> (allowance, reason): queries whose EXECUTED shuffle count is
 # AQE-nondeterministic run-to-run on identical data (a borderline join
@@ -387,77 +363,19 @@ _SHUFFLE_JITTER: dict[str, tuple[int, str]] = {
 }
 
 
-def _prior_shuffles(
-    sf_dir: str, exclude_round: int | None = None
-) -> tuple[str | None, dict[str, int]]:
-    """(filename, {query: executed shuffles}) from the newest
-    SCANS_r{N}.json recorded at the SAME sf_dir — cross-scale AQE
-    choices differ, so only same-scale rounds are comparable.
-    ``exclude_round`` drops the round currently being WRITTEN, so a
-    re-run within one round still compares against the previous
-    round's artifact instead of its own first sweep."""
-    import glob
-    import re as _re
-
-    best: tuple[int, str] | None = None
-    for path in glob.glob(
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "SCANS_r*.json")
-    ):
-        m = _re.search(r"SCANS_r(\d+)\.json$", path)
-        if not m or (exclude_round is not None
-                     and int(m.group(1)) >= exclude_round):
-            continue
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except Exception:  # noqa: BLE001 — unreadable prior is no prior
-            continue
-        if data.get("sf_dir") != sf_dir:
-            continue
-        rnd = int(m.group(1))
-        if best is None or rnd > best[0]:
-            best = (rnd, path)
-    if best is None:
-        return None, {}
-    with open(best[1]) as f:
+def _prior_shuffles(sf_dir: str) -> tuple[str | None, dict[str, int]]:
+    """(filename, {query: executed shuffles}) from the pinned sweep if
+    it was recorded at the SAME sf_dir — cross-scale AQE choices
+    differ, so another scale has no comparable prior."""
+    with open(PINNED) as f:
         data = json.load(f)
-    return os.path.basename(best[1]), {
+    if data.get("sf_dir") != sf_dir:
+        return None, {}
+    return os.path.basename(PINNED), {
         n: q["shuffles"]
         for n, q in data.get("queries", {}).items()
         if isinstance(q.get("shuffles"), int)
     }
-
-
-def _current_prep_round() -> int | None:
-    """The round currently being prepared: max recorded CORRECTNESS
-    round + 1 — the same derivation scripts/grading_manifest.py uses.
-    The shuffle trend gate excludes any SCANS artifact from this round
-    so a mid-round re-run compares against the PREVIOUS round's state,
-    never its own first sweep. None before the first graded round.
-
-    TAIL-WINDOW CAVEAT (r16 advice): in the sliver after
-    CORRECTNESS_rN is recorded but before round N+1's first edit, an
-    ad-hoc (non-canonically-named) run computes prep=N+1 and takes
-    SCANS_rN as its prior — a self-comparison IF one still considers
-    round N open. The states "tail of N" and "start of N+1" are
-    indistinguishable from artifacts alone (both have CORRECTNESS max
-    = SCANS max = N), and any formula that drops SCANS_rN there also
-    drops the legitimate prior at the start of round N+1, so this is
-    documented rather than coded around. The canonical per-round
-    invocation (--json SCANS_r{N}.json) is unaffected: it derives the
-    exclusion from its own output filename, never from this
-    fallback."""
-    import glob as _glob
-    import re as _re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(m.group(1))
-        for p in _glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-        if (m := _re.search(r"r(\d+)\.json$", p))
-    ]
-    return max(rounds) + 1 if rounds else None
 
 
 def main() -> int:
@@ -491,21 +409,7 @@ def main() -> int:
         extra_conf={"spark.sql.ui.retainedExecutions": "5000"},
     )
     t0 = time.time()
-    exclude = None
-    if json_out:
-        import re as _re
-
-        m = _re.search(r"SCANS_r(\d+)\.json$", json_out)
-        if m:
-            exclude = int(m.group(1))
-    if exclude is None:
-        # No canonical SCANS_r{N}.json output name to derive the
-        # in-progress round from (r15 ADVICE: a custom -o name or a
-        # no-JSON ad-hoc run would otherwise compare against the
-        # artifact THIS round already committed, flagging its own
-        # expected shuffle moves as regressions).
-        exclude = _current_prep_round()
-    prior_file, prior_shuffles = _prior_shuffles(sf_dir, exclude)
+    prior_file, prior_shuffles = _prior_shuffles(sf_dir)
     report: dict[str, dict] = {}
     new_flags: list[str] = []
     shuffle_flags: list[str] = []
@@ -536,7 +440,7 @@ def main() -> int:
         report[name] = {
             "scans": dict(tables),
             # executed exchange nodes across ALL the query's jobs —
-            # trend data (round-over-round shuffle-count drift on a
+            # trend data (shuffle-count drift against the pin on a
             # rewrite shows here even when scans stay flat); the
             # per-operator shuffle BOUNDS live in tests/test_plans.py
             "shuffles": extras.get("shuffles", 0),
@@ -553,9 +457,6 @@ def main() -> int:
         prior_sh = prior_shuffles.get(name)
         jitter = _SHUFFLE_JITTER.get(name, (0, ""))[0]
         sh_over = prior_sh is not None and cur_sh > prior_sh + jitter
-        if sh_over and name in _SHUFFLE_REBASELINE:
-            report[name]["shuffle_rebaselined"] = _SHUFFLE_REBASELINE[name]
-            sh_over = False
         if sh_over:
             report[name]["shuffle_over"] = {
                 "prior": prior_sh, "current": cur_sh

@@ -313,7 +313,7 @@ def test_triangle_count_reuses_edge_build(spark):
     designed shuffle budget instead of re-expanding the co-purchase
     self-join per reference (74 exchanges before the persist fix).
     Asserted on the LAZY form (checkpoints.lazy_results — the
-    scripts/dump_plans.py toggle): the default path checkpoints the
+    scripts/dump_query_plan.py toggle): the default path checkpoints the
     1-row result and releases the persisted frames, which hides the
     shape behind an RDD scan."""
     from big_data_analytics_final_project_spark.operators.checkpoints import (

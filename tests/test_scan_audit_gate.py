@@ -1,83 +1,48 @@
-"""The shuffle trend gate's prior-artifact selection
-(scripts/scan_audit.py) — the r15 ADVICE hole: an ad-hoc run (no
---json, or a non-canonical output name) used to compare against the
-artifact the SAME round had already committed, flagging its own
-expected shuffle moves as regressions. The fix derives the in-progress
-round from max(CORRECTNESS round)+1 and excludes same-round artifacts;
-these pins hold that selection against the repo's committed state."""
+"""The shuffle trend gate's pinned baseline (scripts/scan_audit.py
+against scripts/scan_audit_baseline.json): the pin must be a full
+sweep at the audit's default scale, so every registered query has a
+prior to be gated against, and a sweep at another scale must find no
+prior (cross-scale AQE choices differ). Reads JSON only; no Spark."""
 
 from __future__ import annotations
 
-import glob
+import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from scan_audit import _current_prep_round, _prior_shuffles  # noqa: E402
+from scan_audit import PINNED, _prior_shuffles  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
 
-def _rounds(pattern: str, sf_dir: str | None = None) -> list[int]:
-    """Recorded round numbers, optionally restricted to artifacts
-    whose sf_dir field equals `sf_dir` — the selection under test is
-    same-scale-only, so the expectation must be too (r16 advice: an
-    unfiltered expectation breaks the moment any round records a scan
-    audit at a different scale)."""
-    import json
-
-    out = []
-    for p in glob.glob(os.path.join(REPO, pattern)):
-        m = re.search(r"r(\d+)\.json$", p)
-        if not m:
-            continue
-        if sf_dir is not None:
-            try:
-                with open(p) as fh:
-                    if json.load(fh).get("sf_dir") != sf_dir:
-                        continue
-            except (OSError, ValueError):
-                continue
-        out.append(int(m.group(1)))
-    return sorted(out)
+def _pin() -> dict:
+    with open(PINNED) as f:
+        return json.load(f)
 
 
-def test_prep_round_is_one_past_last_graded():
-    graded = _rounds("CORRECTNESS_r*.json")
-    assert graded, "repo has graded rounds"
-    assert _current_prep_round() == max(graded) + 1
+def test_pin_is_recorded_at_sf0001():
+    assert _pin()["sf_dir"] == SF
 
 
-def test_prior_never_selects_the_in_progress_round():
-    """The default (fallback) exclusion: the chosen prior artifact's
-    round must predate the round being prepared, even when that
-    round's own SCANS_r{N}.json is already committed."""
-    prep = _current_prep_round()
-    fname, shuffles = _prior_shuffles(SF, prep)
-    assert fname is not None
-    m = re.search(r"SCANS_r(\d+)\.json$", fname)
-    assert int(m.group(1)) < prep
-    assert shuffles and all(isinstance(v, int) for v in shuffles.values())
+def test_pin_names_every_registered_query():
+    """A query missing from the pin (or pinned without an int shuffle
+    count) would silently escape the gate; a re-pin after a new
+    registration must be a full sweep."""
+    from big_data_analytics_final_project_spark.queries import all_queries
 
-
-def test_exclude_round_steps_back_through_history():
-    """Excluding round N must select the newest same-sf artifact
-    strictly older than N — expectation restricted to sf0.001
-    artifacts, matching the selection's own same-scale rule."""
-    scans = _rounds("SCANS_r*.json", sf_dir=SF)
-    assert len(scans) >= 2
-    newest, second = scans[-1], scans[-2]
-    fname, _ = _prior_shuffles(SF, newest + 1)
-    assert fname == f"SCANS_r{newest}.json"
-    fname, _ = _prior_shuffles(SF, newest)
-    assert fname == f"SCANS_r{second}.json"
+    pinned = _pin()["queries"]
+    assert set(pinned) == set(all_queries())
+    assert all(isinstance(q.get("shuffles"), int) for q in pinned.values())
+    fname, shuffles = _prior_shuffles(SF)
+    assert fname == os.path.basename(PINNED)
+    assert shuffles == {n: q["shuffles"] for n, q in pinned.items()}
 
 
 def test_mismatched_sf_returns_no_prior():
     """Cross-scale AQE choices differ; a different sf_dir must never
     be treated as a comparable prior."""
-    fname, shuffles = _prior_shuffles("/root/testdata/sf0.1", None)
+    fname, shuffles = _prior_shuffles("/root/testdata/sf0.1")
     assert fname is None and shuffles == {}

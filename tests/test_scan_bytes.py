@@ -7,8 +7,8 @@ scripts/scan_audit.py comments — a future hidden rescan could hide
 behind the stale comment).
 
 Instrument: ``FileSystem.getGlobalStorageStatistics().get("file")
-.getLong("bytesRead")`` — the ground-truth counter the r14 audit used
-(COVERAGE.md r14 §3). Parquet data pages are read through a mmap'd /
+.getLong("bytesRead")`` — the ground-truth counter the scan audit's
+byte-counter notes use. Parquet data pages are read through a mmap'd /
 vectored path that bypasses the counter, but every scan task's FOOTER
 open registers (~2-6 KB per table at single-partition SF), so at
 SF_SMOKE the delta divided by an in-process calibrated one-scan cost

@@ -1,15 +1,9 @@
 """The streaming-maintained anomaly monitor (streaming/rollup.py
-`score_hourly_anomalies`): its scoring expressions are a deliberate
-replica of the graded `events_hourly_anomaly` (that function's source
-is fingerprint-frozen between grading windows, so it cannot be
-refactored into a shared helper mid-cycle) — these tests are the
-anti-drift guard the refactor would otherwise provide:
-
-1. score(batch hourly frame) must be ROW-IDENTICAL to the graded
-   query on the same data (expression-drift pin), and
-2. score(streamed rollup zone) must be row-identical too — the full
-   standing pipeline: file-drop stream → foreachBatch zone fold →
-   monitor read (end-to-end stream==batch).
+`score_hourly_anomalies`): `events_hourly_anomaly` is the same scorer
+applied to the batch hourly aggregate, so scoring the streamed rollup
+zone must be row-identical to the batch query — the full standing
+pipeline: file-drop stream → foreachBatch zone fold → monitor read
+(end-to-end stream==batch).
 """
 
 from __future__ import annotations
@@ -17,7 +11,6 @@ from __future__ import annotations
 import shutil
 import tempfile
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -52,27 +45,10 @@ def _rows(df):
     ]
 
 
-@pytest.fixture(scope="module")
-def graded(spark):
-    return _rows(events_hourly_anomaly(spark, SF_SMOKE))
-
-
-def test_scorer_matches_graded_query_on_batch_frame(spark, graded):
-    """Expression-drift pin: identical (hour, n_events) input must give
-    bit-identical scores (floats included) to the graded query."""
-    hourly = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    assert _rows(score_hourly_anomalies(hourly)) == graded
-    assert any(r[5] for r in graded) or len(graded) > 0  # frame nonempty
-
-
-def test_streamed_zone_scores_match_batch_query(spark, graded):
+def test_streamed_zone_scores_match_batch_query(spark):
     """End-to-end: stream the event log in 3 chronological file drops,
     fold into the rollup zone, score the zone — row-identical to the
-    batch graded query over the same events."""
+    batch query over the same events."""
     root = tempfile.mkdtemp(prefix="stream_anom_")
     try:
         src = f"{root}/src"
@@ -99,6 +75,6 @@ def test_streamed_zone_scores_match_batch_query(spark, graded):
         scored = score_hourly_anomalies(
             read_hourly_rollup(spark, zone).select("hour", "n_events")
         )
-        assert _rows(scored) == graded
+        assert _rows(scored) == _rows(events_hourly_anomaly(spark, SF_SMOKE))
     finally:
         shutil.rmtree(root, ignore_errors=True)

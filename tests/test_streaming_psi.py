@@ -1,11 +1,10 @@
 """The standing PSI monitor (streaming/psi.py): its frozen-reference
-binning + scoring replicate the graded `segment_value_psi` (source
-fingerprint-frozen between grading windows — see the module
-docstring), so these tests are the anti-drift guard:
+binning + scoring replicate the batch `segment_value_psi` (see the
+module docstring), so these tests are the anti-drift guard:
 
-1. batch pin: freeze bounds + reference histogram from the graded
+1. batch pin: freeze bounds + reference histogram from the batch
    query's own reference half, bin the current half batch-side, score
-   — row-identical (floats included) to the graded query;
+   — row-identical (floats included) to the batch query;
 2. end-to-end: stream the current half in 3 file drops through the
    retry-guarded additive fold, score the maintained zone — identical
    again; and a re-delivered final batch must change nothing.
