@@ -26,39 +26,29 @@ from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
 
-# Default for operators whose result materialization is optional
-# (pagerank, triangle_count): True = checkpoint the result and release
-# the loop-invariant persisted frames (the production posture). Plan
-# tooling (scripts/dump_query_plan.py) flips this to False via
-# ``lazy_results`` so the dumped plans show the real join/aggregate
-# shapes instead of an opaque post-checkpoint RDD scan. The override
-# is THREAD-LOCAL (r12 verdict finding #3): a lazy_results scope on
-# one thread can no longer leak lazy plans into queries built
-# concurrently on another (e.g. a parallel pytest runner), while the
-# single-threaded plan tooling behaves exactly as before.
-MATERIALIZE_RESULTS = True
-
+# Operators that checkpoint their result and release their staging or
+# loop-invariant frames do so unless ``lazy_results`` is active: plan
+# tooling (scripts/dump_query_plan.py, plans/lint.py, the plan-shape
+# tests) then sees the real join/aggregate shapes instead of an opaque
+# post-checkpoint RDD scan. The scope is THREAD-LOCAL: a lazy_results
+# scope on one thread cannot leak lazy plans into queries built
+# concurrently on another (e.g. a parallel pytest runner).
 _tl = threading.local()
 
 
-def resolve_materialize(flag: bool | None) -> bool:
-    """Per-call override if given, else this thread's scoped override
-    (set by ``lazy_results``), else the module default."""
-    if flag is not None:
-        return flag
-    return getattr(_tl, "materialize", MATERIALIZE_RESULTS)
+def resolve_materialize() -> bool:
+    """False inside this thread's ``lazy_results`` scope, else True."""
+    return getattr(_tl, "materialize", True)
 
 
 @contextmanager
 def lazy_results():
-    """Scoped ``materialize=False`` default for plan tooling.
+    """Keep operators' lazy plans for the scope, on this thread only.
 
-    Every plan-inspection site (scripts/dump_query_plan.py, plans/lint.py,
-    the plan-shape tests) needs the same flip-and-restore;
+    Every plan-inspection site needs the same flip-and-restore;
     centralizing it here means none of them can forget the restore.
-    The override lives in a thread-local, so concurrent operator
-    calls on OTHER threads keep the production materialize=True
-    posture; nesting restores the outer scope's value."""
+    Calls on OTHER threads keep checkpointing their results; nesting
+    restores the outer scope's value."""
     old = getattr(_tl, "materialize", None)
     _tl.materialize = False
     try:
@@ -80,6 +70,13 @@ def unpersist_local_checkpoint(df: DataFrame) -> None:
     GC-eventually behavior rather than failing the job. Callers must
     only invoke this once nothing will read the frame again —
     a locally-checkpointed RDD cannot be recomputed.
+
+    Spark warns "RDD … was locally checkpointed, its lineage has been
+    truncated" when the blocks go. The message is logged by RDD code
+    (``RDD.class`` in spark-core) under the concrete RDD class's
+    logger (``org.apache.spark.rdd.MapPartitionsRDD`` for a DataFrame
+    checkpoint), which every other warning of that class shares, so
+    it stays on: silencing it would hide those too.
     """
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)

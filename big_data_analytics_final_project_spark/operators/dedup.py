@@ -108,7 +108,6 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     use_shingles: bool = False,
     allow_quadratic: bool = False,
-    materialize: bool | None = None,
 ) -> DataFrame:
     """Exact set-Jaccard near-dup pairs with PPJoin-style prefix
     filtering.
@@ -141,8 +140,8 @@ def jaccard_pairs(
     fuzzy r16 drains materialize, and strictly smaller than the raw
     text it replaces re-reading. The result is checkpointed too, so
     the staging blocks are freed immediately (operators/checkpoints.py
-    hygiene); plan tooling flips ``materialize`` off via
-    ``lazy_results`` to see the real join shapes.
+    hygiene); ``lazy_results()`` keeps the lazy plan, with the real
+    join shapes.
     """
     from .checkpoints import resolve_materialize, unpersist_local_checkpoint
 
@@ -153,7 +152,7 @@ def jaccard_pairs(
             "reference-path testing at toy scale (production paths: "
             "threshold>0 prefix filtering, or minhash_lsh_pairs)"
         )
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     sets = (
         _shingle_sets(docs, text_col, id_col)
         if use_shingles
@@ -302,7 +301,6 @@ def jaccard_pairs_collapsed(
     id_col: str = "doc_id",
     use_shingles: bool = False,
     expand: bool = True,
-    materialize: bool | None = None,
 ) -> DataFrame:
     """`jaccard_pairs` with exact duplicates collapsed FIRST — the
     production composition for duplicate-heavy corpora.
@@ -355,13 +353,13 @@ def jaccard_pairs_collapsed(
     md5(text), but only reps needs the text itself), and materializing
     a 100 TB text column to save one pruned scan inverts the trade
     every other drain in this module makes. Staging blocks are freed
-    once the result checkpoint lands (operators/checkpoints.py); plan
-    tooling flips ``materialize`` off via ``lazy_results``, and the
-    lazy twin is pinned row-identical in tests/test_dedup_drain.py.
+    once the result checkpoint lands (operators/checkpoints.py);
+    ``lazy_results()`` keeps the lazy plan, and that lazy twin is
+    pinned row-identical in tests/test_dedup_drain.py.
     """
     from .checkpoints import resolve_materialize, unpersist_local_checkpoint
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     hashed = docs.select(
         F.col(id_col).alias("member_id"),
         F.col(text_col).alias("_text"),
@@ -496,7 +494,6 @@ def overlap_coeff_pairs(
     threshold: float = 0.6,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool | None = None,
 ) -> DataFrame:
     """Exact overlap-coefficient near-dup pairs:
     |A∩B| / min(|A|, |B|) ≥ threshold over distinct 3-shingle sets.
@@ -534,13 +531,13 @@ def overlap_coeff_pairs(
     per document. At 100 TB the trade is one shingle-set-cardinality
     checkpoint write against two extra corpus scans + re-shinglings.
     The result is checkpointed too, freeing the staging blocks
-    immediately (operators/checkpoints.py hygiene); plan tooling flips
-    ``materialize`` off via ``lazy_results`` to see the real
-    join/aggregate shapes, and the lazy twin is pinned row-identical
+    immediately (operators/checkpoints.py hygiene);
+    ``lazy_results()`` keeps the lazy plan, with the real
+    join/aggregate shapes, and that lazy twin is pinned row-identical
     in tests/test_dedup_drain.py."""
     from .checkpoints import resolve_materialize, unpersist_local_checkpoint
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     sets = _shingle_sets(docs, text_col, id_col)
     if mat:
         sets = sets.localCheckpoint(eager=True)

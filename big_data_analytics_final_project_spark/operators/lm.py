@@ -326,7 +326,6 @@ def lm_train_score(
     doc_id_col: str = "doc_id",
     text_col: str = "text",
     vocab_k: int = 2048,
-    materialize: bool | None = None,
 ) -> DataFrame:
     """Train on the corpus and score every document against it — the
     self-perplexity ranking CCNet uses for quality bucketing.
@@ -338,11 +337,11 @@ def lm_train_score(
     zero-bigram doc re-attach all re-derive from the checkpoint with
     array ops only. The result is checkpointed too, so the staging
     blocks are freed immediately (operators/checkpoints.py hygiene);
-    plan tooling flips ``materialize`` off via ``lazy_results`` to
-    see the real join/agg shapes."""
+    ``lazy_results()`` keeps the lazy plan, with the real join/agg
+    shapes."""
     from .checkpoints import resolve_materialize, unpersist_local_checkpoint
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     staged = _staged_tokens(docs, doc_id_col, text_col)
     if mat:
         # LAZY (r18, the bpe_train pattern): the fit's vocab top-V

@@ -48,7 +48,6 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize: bool | None = None,
 ) -> DataFrame:
     """Ranks after ``n_iters`` synchronous PageRank rounds from a
     uniform start. Returns (node, pagerank), undamped mass (1-d)/N
@@ -56,14 +55,14 @@ def pagerank(
     built from undirected pairs); dangling-mass handling is therefore
     not implemented — feed a symmetrized edge list.
 
-    By default the node-sized result is materialized eagerly (one
-    localCheckpoint — the same contract connected_components returns
-    under) so the persisted loop-invariant frames can be RELEASED
-    before returning (the MLlib train-then-unpersist idiom; otherwise
-    every call pins an edge-sized cached frame for the session's
-    life). ``materialize=False`` returns the lazy n_iters-round plan
-    and leaves the persisted frames for the caller to manage."""
-    mat = resolve_materialize(materialize)
+    The node-sized result is materialized eagerly (one localCheckpoint
+    — the same contract connected_components returns under) so the
+    persisted loop-invariant frames can be RELEASED before returning
+    (the MLlib train-then-unpersist idiom; otherwise every call pins
+    an edge-sized cached frame for the session's life).
+    ``lazy_results()`` keeps the lazy n_iters-round plan and leaves
+    the persisted frames for the caller to manage."""
+    mat = resolve_materialize()
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )

@@ -66,7 +66,6 @@ def priority_sample(
     k: int,
     id_col: str = "doc_id",
     salt: str = ":psample",
-    materialize: bool | None = None,
 ) -> DataFrame:
     """Weighted sample of `k` rows without replacement, proportional to
     `weight_col`, with unbiased subset-sum estimator weights.
@@ -85,15 +84,14 @@ def priority_sample(
     The (k+1)-row race frame has TWO consumers (the tau aggregate and
     the sample cut), and each lazily re-runs the corpus-wide
     TakeOrdered — the executed plan scanned the corpus twice (r13
-    scan audit). Under `materialize` (the module posture,
-    operators/checkpoints.py) the k+1 rows are eagerly checkpointed —
-    ONE corpus scan — and the k-row result is checkpointed so the
-    frame's blocks are freed before returning; `lazy_results()`
-    keeps the declarative plan for tooling.
+    scan audit). So the k+1 rows are eagerly checkpointed — ONE
+    corpus scan — and the k-row result is checkpointed so the frame's
+    blocks are freed before returning (operators/checkpoints.py);
+    `lazy_results()` keeps the lazy plan.
     """
     from .checkpoints import resolve_materialize, unpersist_local_checkpoint
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     pos = df.filter(
         F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)
     ).withColumn("priority", _priority(id_col, weight_col, salt))

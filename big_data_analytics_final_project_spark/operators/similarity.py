@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoints import resolve_materialize, unpersist_local_checkpoint
+
 # --- portable vector math (expr strings shared in spirit with SQL) ----
 
 
@@ -136,6 +138,18 @@ ORDER BY query_id, rank
 
 
 # --- IVF (inverted file / coarse quantizer) ---------------------------
+#
+# Both IVF operators scan the corpus twice per execution: the centroid
+# fit (the codebook must see every row before any assignment starts)
+# and the assignment pass, whose (id, vector, cell) output is eagerly
+# checkpointed once for every consumer to filter. Two is the floor:
+# one scan would checkpoint the raw corpus before the fit, paying a
+# copy of the whole embeddings zone to save one columnar scan. The
+# assignment frame is the index build's product — at scale the zone's
+# cell-partitioned layout, written once and probed many times. The
+# result is checkpointed and the assignment blocks freed before
+# returning; `lazy_results()` keeps the lazy plan, in which each
+# consumer re-scans the corpus.
 
 
 def _ivf_ranked(base: DataFrame, n_centroids: int) -> DataFrame:
@@ -246,13 +260,20 @@ def embedding_near_dup(
     duplicate batch stays one component). Cells at or under the cap —
     every cell at the graded SFs — are exhaustive and unchanged. The
     split and chain are pure md5/aggregate column arithmetic, so the
-    DuckDB oracle reproduces them bit-for-bit."""
+    DuckDB oracle reproduces them bit-for-bit.
+
+    The size aggregate, both self-join sides and the rep chain read
+    the checkpointed cell assignment: two corpus scans per execution,
+    the floor short of checkpointing the raw corpus (IVF note)."""
+    mat = resolve_materialize()
     base = embeddings.select(
         F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
     )
     cells = _ivf_ranked(base, n_centroids).filter(F.col("rn") == 1).select(
         "_id", "_v", "cid"
     )
+    if mat:
+        cells = cells.localCheckpoint(eager=True)
     # per-cell sizes: ≤ n_centroids rows — aggregate then broadcast
     # back (a windowed count would shuffle the corpus on the ≤16-value
     # cell key: exactly the skew this pass exists to avoid)
@@ -316,11 +337,15 @@ def embedding_near_dup(
             "cosine_sim",
         )
     )
-    return (
+    out = (
         in_block.unionByName(chain)
         .filter(F.col("cosine_sim") >= threshold)
         .orderBy("vec_a", "vec_b")
     )
+    if mat:
+        out = out.localCheckpoint(eager=True)
+        unpersist_local_checkpoint(cells)
+    return out
 
 
 def embedding_near_dup_sql(
@@ -401,19 +426,31 @@ def ann_ivf(
     nearest centroid by cosine), queries probe their `n_probe` nearest
     cells and run exact cosine inside them.
 
-    Centroids are the first `n_centroids` vectors by id — a
-    deterministic stand-in for a trained k-means codebook (the operator
-    shape, assignment plan and probe path are identical; training the
-    codebook is an offline concern). At scale the cell id becomes the
-    zone partition key: a probe reads `n_probe` partitions, never the
-    full corpus — candidates ∝ corpus/n_centroids × n_probe.
+    Centroids are the `n_centroids` vectors with the smallest md5(id)
+    (`_ivf_ranked`) — a deterministic stand-in for a trained k-means
+    codebook (the operator shape, assignment plan and probe path are
+    identical; training the codebook is an offline concern). At scale
+    the cell id becomes the zone partition key: a probe reads
+    `n_probe` partitions, never the full corpus — candidates ∝
+    corpus/n_centroids × n_probe.
+
+    The checkpointed assignment keeps only the rows either side reads
+    — rn=1 for every vector, rn<=n_probe for query vectors — and the
+    index and probe sides filter it: two corpus scans per execution,
+    the floor short of checkpointing the raw corpus (IVF note).
     """
     from pyspark.sql import Window
 
+    mat = resolve_materialize()
     base = embeddings.select(
         F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
     )
-    assigned = _ivf_ranked(base, n_centroids)
+    assigned = _ivf_ranked(base, n_centroids).filter(
+        (F.col("rn") == 1)
+        | (query_pred(F.col("_id")) & (F.col("rn") <= n_probe))
+    )
+    if mat:
+        assigned = assigned.localCheckpoint(eager=True)
     vec_bucket = assigned.filter(F.col("rn") == 1).select(
         F.col("_id").alias("neighbor_id"), F.col("_v").alias("cv2"),
         F.col("cid").alias("bucket"),
@@ -427,7 +464,7 @@ def ann_ivf(
     w_rank = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id")
     )
-    return (
+    out = (
         vec_bucket.join(F.broadcast(probes), "bucket")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .transform(lambda d: with_cosine(d, "qv", "cv2"))
@@ -436,6 +473,10 @@ def ann_ivf(
         .select("query_id", "neighbor_id", "rank", "cosine_sim")
         .orderBy("query_id", "rank")
     )
+    if mat:
+        out = out.localCheckpoint(eager=True)
+        unpersist_local_checkpoint(assigned)
+    return out
 
 
 def ann_ivf_sql(

@@ -260,9 +260,7 @@ def hll_daily_sketches(
     )
 
 
-def hll_rolling_distinct(
-    daily: DataFrame, window_days: int = 7, materialize: bool | None = None
-) -> DataFrame:
+def hll_rolling_distinct(daily: DataFrame, window_days: int = 7) -> DataFrame:
     """Rolling `window_days`-day distinct estimates from per-day HLL
     sketches: ``(day, n_days_merged, approx_distinct)``.
 
@@ -286,15 +284,15 @@ def hll_rolling_distinct(
     join); when it is an expensive derivation (a raw-corpus
     `hll_daily_sketches`), column pruning specializes each branch's
     subtree and defeats AQE exchange reuse — the corpus would scan
-    once per branch. Under `materialize` (default: the module
-    posture, see operators/checkpoints.py) the day-sized `daily` is
-    eagerly checkpointed first — ONE corpus scan — and the day-sized
-    result is checkpointed so the intermediate's blocks are freed
-    before returning (the pagerank/components idiom).
+    once per branch. So the day-sized `daily` is eagerly checkpointed
+    first — ONE corpus scan — and the day-sized result is
+    checkpointed so the intermediate's blocks are freed before
+    returning (the pagerank/components idiom, operators/checkpoints.py);
+    `lazy_results()` keeps the lazy plan.
     """
     from .checkpoints import resolve_materialize, unpersist_local_checkpoint
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     if mat:
         daily = daily.localCheckpoint(eager=True)
     w = window_days
@@ -385,7 +383,6 @@ def histogram_rolling_quantiles(
     n_bins: int = 128,
     window_days: int = 7,
     by: list[str] | None = None,
-    materialize: bool | None = None,
 ) -> DataFrame:
     """Rolling `window_days`-day quantile estimates from per-day
     histograms: ``(day, *by, n_days_merged, q, estimate)`` — pass the
@@ -412,17 +409,15 @@ def histogram_rolling_quantiles(
     observed-day join), and column pruning specializes each branch
     past AQE exchange reuse — composed directly over a raw-corpus
     `histogram_daily_sketches`, the corpus would scan once PER
-    BRANCH. Under `materialize` (default: the module posture,
-    operators/checkpoints.py) the day×bin-sized `daily` is eagerly
-    checkpointed first — ONE corpus scan, honoring the scan-once
-    claim above — and the day×q-sized result is checkpointed so the
-    intermediate's blocks are freed before returning. Plan tooling
-    flips `lazy_results()` to keep inspecting the declarative
-    topology.
+    BRANCH. So the day×bin-sized `daily` is eagerly checkpointed
+    first — ONE corpus scan, honoring the scan-once claim above — and
+    the day×q-sized result is checkpointed so the intermediate's
+    blocks are freed before returning (operators/checkpoints.py).
+    `lazy_results()` keeps the lazy plan.
     """
     from .checkpoints import resolve_materialize, unpersist_local_checkpoint
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     if mat:
         daily = daily.localCheckpoint(eager=True)
     w = window_days

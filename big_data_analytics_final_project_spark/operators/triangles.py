@@ -36,25 +36,23 @@ from pyspark.sql import functions as F
 from .checkpoints import resolve_materialize
 
 
-def triangle_count(
-    edges: DataFrame, materialize: bool | None = None
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Count triangles in an undirected simple graph.
 
     ``edges``: columns (u, v), one row per undirected edge with u < v,
     no duplicates, no self-loops (pre-dedup otherwise — same contract
     as operators/pagerank.py's edge input).
 
-    Returns a single row (n_nodes, n_edges, n_triangles). By default
-    that row is materialized eagerly (a 1-row localCheckpoint) so the
+    Returns a single row (n_nodes, n_edges, n_triangles). That row is
+    materialized eagerly (a 1-row localCheckpoint) so the
     loop-invariant persisted frames can be RELEASED before returning —
     the MLlib train-then-unpersist idiom; without it every call leaks
     three edge-sized cached frames into the session for good.
-    ``materialize=False`` returns the fully lazy plan and leaves the
-    persisted frames alive for the caller (used by the plan-shape
-    tests, which assert on the lazy form).
+    ``lazy_results()`` keeps the lazy plan and leaves the persisted
+    frames alive for the caller (the plan-shape tests assert on that
+    form).
     """
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     # `edges` is referenced four times (two degree attaches, the edge
     # count, the degree build) and `oriented` three times (both wedge
     # legs + the closing side) — persist both so Catalyst plans ONE

@@ -606,9 +606,7 @@ ORDER BY r_name, n_name
 """
 
 
-def customer_cohort_setops(
-    spark: SparkSession, sf_dir: str, materialize: bool | None = None
-) -> DataFrame:
+def customer_cohort_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relational set operations (capability upgrade — SURVEY.md §2.8:
     the reference has no UNION/INTERSECT/EXCEPT): 1995-vs-1996 buyer
     cohorts via intersect / subtract, tagged and unioned.
@@ -623,13 +621,13 @@ def customer_cohort_setops(
     year filter); the lists and the result are customer-sized. The
     pre-`distinct` is semantics-free — INTERSECT/EXCEPT are set ops
     already — and dedups each list once instead of inside every
-    branch. `lazy_results()` keeps the declarative plan for tooling."""
+    branch. `lazy_results()` keeps the lazy plan."""
     from ..operators.checkpoints import (
         resolve_materialize,
         unpersist_local_checkpoint,
     )
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     orders = load_table(spark, sf_dir, "orders")
     y95 = (
         orders.filter(F.year("o_orderdate") == 1995)

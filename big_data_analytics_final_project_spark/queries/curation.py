@@ -49,9 +49,7 @@ def _seed_hash(seed: int):
     return lambda t: F.md5(F.concat(F.lit(f"{seed}:"), t))
 
 
-def corpus_curation_report(
-    spark: SparkSession, sf_dir: str, materialize: bool | None = None
-) -> DataFrame:
+def corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivors ∩ quality ∩ language ∩ sample → per-(lang, source)
     doc counts and exact mean quality. The gates compare doubles that
     both engines compute from identical expressions, so the filter
@@ -77,8 +75,7 @@ def corpus_curation_report(
     semantics are pinned to their standalone queries (doc_quality_
     score, doc_lang_id, doc_sample_stratified, doc_dedup_survivors)
     by the shared DuckDB oracle, which still chains the stage CTEs
-    verbatim. `lazy_results()` keeps the declarative plan for
-    tooling."""
+    verbatim. `lazy_results()` keeps the lazy plan."""
     from ..functions.text import (
         LANG_MARKERS,
         alpha_ratio,
@@ -94,7 +91,7 @@ def corpus_curation_report(
     from ..operators.dedup import N_BANDS, N_SEEDS, _shingle_sets
     from .dedup import MINHASH_THRESHOLD
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     docs = load_table(spark, sf_dir, "documents")
 
     # ---- the ONE feature pass ----

@@ -89,9 +89,7 @@ def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dedup_fuzzy_pairs_q(
-    spark: SparkSession, sf_dir: str, materialize: bool | None = None
-) -> DataFrame:
+def dedup_fuzzy_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-dup pairs, prefix-blocked: docs sharing the
     first 12 normalized characters are candidates; a pair survives if
     the Levenshtein distance of their 48-char normalized prefixes is
@@ -112,16 +110,16 @@ def dedup_fuzzy_pairs_q(
     documents parquet is scanned exactly once and the normalization
     regex runs exactly once per document. The result is checkpointed
     too, freeing the staging blocks immediately
-    (operators/checkpoints.py hygiene); plan tooling flips
-    `materialize` off via `lazy_results`, and the lazy twin is pinned
-    row-identical in tests/test_dedup_drain.py."""
+    (operators/checkpoints.py hygiene); `lazy_results()` keeps the
+    lazy plan, and that lazy twin is pinned row-identical in
+    tests/test_dedup_drain.py."""
     from ..functions.text import norm_text
     from ..operators.checkpoints import (
         resolve_materialize,
         unpersist_local_checkpoint,
     )
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.substring(norm_text(F.col("text")), 1, 48).alias("slice")
     )

@@ -91,9 +91,7 @@ ORDER BY user_id
 """
 
 
-def conversion_funnel(
-    spark: SparkSession, sf_dir: str, materialize: bool | None = None
-) -> DataFrame:
+def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strictly-ordered view → click → purchase funnel: a user counts
     at a stage only if the stage's first event happens AFTER the
     previous stage's first event. One row: users reaching each stage.
@@ -107,19 +105,18 @@ def conversion_funnel(
     stage's join and the final count), and optimizer specialization
     per branch (count-only pruning, per-branch AQE join strategy)
     defeats exchange reuse — measured 5 events scans in the executed
-    plan where the design claims one per stage. Under `materialize`
-    (the default posture, operators/checkpoints.py) each frontier is
+    plan where the design claims one per stage. So each frontier is
     eagerly checkpointed — user-cardinality, the pagerank node-frame
-    class — so the log is scanned exactly once per stage; the 1-row
+    class — and the log is scanned exactly once per stage; the 1-row
     result is checkpointed and the frontier blocks are freed before
-    returning. `lazy_results()` keeps the declarative plan for
-    tooling."""
+    returning (operators/checkpoints.py). `lazy_results()` keeps the
+    lazy plan."""
     from ..operators.checkpoints import (
         resolve_materialize,
         unpersist_local_checkpoint,
     )
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     events = load_table(spark, sf_dir, "events")
 
     def first_after(event_type: str, frontier, prev_ts: str, out: str):

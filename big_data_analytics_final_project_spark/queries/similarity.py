@@ -10,15 +10,12 @@ from ..operators.kmeans import kmeans_assign, kmeans_assign_sql
 from ..operators.similarity import (
     ann_hyperplane_lsh,
     ann_hyperplane_lsh_sql,
+    ann_ivf,
     ann_ivf_sql,
     embedding_near_dup,
     embedding_near_dup_sql,
     knn_bruteforce,
     knn_bruteforce_sql,
-)
-from ..operators.similarity_staged import (
-    ann_ivf_staged,
-    embedding_near_dup_staged,
 )
 from ..sources import load_table
 from . import QuerySpec
@@ -47,11 +44,8 @@ def ann_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # staged variant (r17): 2 embeddings scans — centroid fit + the
-    # checkpointed assignment build; the lazy `ann_ivf` twin stays
-    # row-identical (tests/test_similarity_drain.py)
     emb = load_table(spark, sf_dir, "embeddings")
-    return ann_ivf_staged(emb, lambda c: c < _N_QUERIES, k=_K_ANN)
+    return ann_ivf(emb, lambda c: c < _N_QUERIES, k=_K_ANN)
 
 
 def _rp_weights(out_dims: int, in_dims: int) -> list[list[float]]:
@@ -248,17 +242,10 @@ def dedup_semantic_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle wraps the near-dup pair SQL in the same recursive
     reachability CTE the token clusters use, so the iterative Spark
-    fixpoint is again checked against a declarative closure.
-
-    r18 drain (the third of the embeddings trio, r17's two landed in
-    similarity_staged.py): the pairs side switches to
-    `embedding_near_dup_staged` — the quantizer ASSIGNMENT frame is
-    checkpointed once and the index/probe/self-join consumers read it,
-    3 → 2 executed embeddings scans, row-identical to the lazy twin
-    (tests/test_similarity_drain.py pins the operator pair)."""
+    fixpoint is again checked against a declarative closure."""
     from ..operators.components import connected_components
 
-    pairs = embedding_near_dup_staged(
+    pairs = embedding_near_dup(
         load_table(spark, sf_dir, "embeddings"), threshold=_NEAR_DUP_T
     ).select("vec_a", "vec_b")
     labels = connected_components(pairs, "vec_a", "vec_b")
@@ -292,13 +279,8 @@ QUERIES: dict[str, QuerySpec] = {
         ann_lsh_q, ann_hyperplane_lsh_sql(f"_id < {_N_QUERIES}", _K_ANN)
     ),
     "ann_ivf": QuerySpec(ann_ivf_q, ann_ivf_sql(f"_id < {_N_QUERIES}", _K_ANN)),
-    # staged variant (r17): 2 embeddings scans — centroid fit + the
-    # checkpointed cell-assignment build; the lazy `embedding_near_dup`
-    # twin stays row-identical (tests/test_similarity_drain.py).
-    # `dedup_semantic_clusters_q` keeps the lazy shape until its own
-    # drain lands with the r19 similarity rotation.
     "embedding_near_dup": QuerySpec(
-        lambda spark, sf_dir: embedding_near_dup_staged(
+        lambda spark, sf_dir: embedding_near_dup(
             load_table(spark, sf_dir, "embeddings"), threshold=_NEAR_DUP_T
         ),
         embedding_near_dup_sql(_NEAR_DUP_T),
@@ -307,8 +289,8 @@ QUERIES: dict[str, QuerySpec] = {
         dedup_semantic_clusters_q, DEDUP_SEMANTIC_CLUSTERS_SQL
     ),
     # iterative Lloyd's k-means, deterministic end-to-end — the trained
-    # upgrade of ann_ivf's first-k codebook, and the semantic-bucketing
-    # op itself (operators/kmeans.py)
+    # upgrade of ann_ivf's md5-sampled codebook, and the
+    # semantic-bucketing op itself (operators/kmeans.py)
     "embedding_kmeans": QuerySpec(
         lambda spark, sf_dir: kmeans_assign(
             load_table(spark, sf_dir, "embeddings"), n_clusters=8, n_iters=3

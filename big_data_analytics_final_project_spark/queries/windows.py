@@ -277,9 +277,7 @@ def purchase_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-def clicks_before_purchase(
-    spark: SparkSession, sf_dir: str, materialize: bool | None = None
-) -> DataFrame:
+def clicks_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join (operators/rangejoin.py): for every purchase, how many
     clicks the same user made in the hour before it ([ts−1h, ts)).
     Capability upgrade — the reference has no interval join (SURVEY.md
@@ -290,18 +288,17 @@ def clicks_before_purchase(
     Scale: the purchase subset has TWO consumers (the interval-join
     probe and the zero-click left-join re-attach), and per-branch
     pruning defeated exchange reuse — the r13 scan audit measured 3
-    events scans. Under `materialize` (the default posture) the
-    purchase subset is eagerly checkpointed — purchases are a thin
-    filtered slice of the log, orders of magnitude under the click
-    fan-out — so events is scanned exactly twice (disjoint purchase /
-    click pushed filters). `lazy_results()` keeps the declarative
-    plan for tooling."""
+    events scans. So the purchase subset is eagerly checkpointed —
+    purchases are a thin filtered slice of the log, orders of
+    magnitude under the click fan-out — and events is scanned exactly
+    twice (disjoint purchase / click pushed filters).
+    `lazy_results()` keeps the lazy plan."""
     from ..operators.checkpoints import (
         resolve_materialize,
         unpersist_local_checkpoint,
     )
 
-    mat = resolve_materialize(materialize)
+    mat = resolve_materialize()
     events = load_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id"

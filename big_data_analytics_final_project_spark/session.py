@@ -60,6 +60,16 @@ _BASE_CONF = {
     # only when get_session builds the first context; a plain driver
     # session keeps Spark's default.
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # Python workers (mapInPandas, UDFs) must import this package. In
+    # local mode they start in the driver's working directory, so a
+    # driver launched from elsewhere would fail with ModuleNotFoundError.
+    # Put the directory that contains the package on the workers'
+    # path; Spark merges this value with its own path and the worker's
+    # PYTHONPATH. Like the codegen cache it reaches only the first
+    # context get_session builds.
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
     # Columnar shuffle/scan defaults are already on in Spark 4; listed
     # knobs above are the ones we actively depend on.
 }

@@ -174,7 +174,7 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     ("embedding_near_dup", {
         "embeddings": (2, "r17 drain (was 3): centroid fit + the "
                           "eager cell-assignment checkpoint "
-                          "(operators/similarity_staged.py); the "
+                          "(operators/similarity.py); the "
                           "self-join sides and rep chain read the "
                           "checkpoint. 2 is the documented floor — "
                           "a 1-scan route would checkpoint the raw "
@@ -184,7 +184,7 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     ("ann_ivf", {
         "embeddings": (2, "r17 drain (was 3): centroid fit + the "
                           "eager ranked-assignment checkpoint "
-                          "(operators/similarity_staged.py); index "
+                          "(operators/similarity.py); index "
                           "and probe sides read the checkpoint. "
                           "Same 2-scan floor and per-run pins as "
                           "embedding_near_dup")
@@ -275,7 +275,7 @@ _BASELINE_ITEMS: list[tuple[str, dict[str, tuple[int, str]]]] = [
     }),
     ("dedup_semantic_clusters", {
         "embeddings": (2, "r18 drain (was 3): the pairs side is "
-                          "embedding_near_dup_staged — centroid fit "
+                          "embedding_near_dup — centroid fit "
                           "+ the eager cell-assignment checkpoint; "
                           "self-join sides and the rep chain read "
                           "the checkpoint, and the component loop "

@@ -612,9 +612,9 @@ def test_cms_sketch_partial_agg_before_exchange(spark):
 def test_lazy_results_is_thread_scoped():
     """The lazy_results override must not leak across threads (r12
     verdict finding #3): an operator built on another thread while
-    plan tooling holds a lazy scope must keep the production
-    materialize=True default. Also pins nesting (inner scope restores
-    the outer) and cleanup (the thread-local vanishes on exit)."""
+    plan tooling holds a lazy scope must keep checkpointing its
+    result. Also pins nesting (inner scope restores the outer) and
+    cleanup (the thread-local vanishes on exit)."""
     import threading
 
     from big_data_analytics_final_project_spark.operators.checkpoints import (
@@ -622,22 +622,21 @@ def test_lazy_results_is_thread_scoped():
         resolve_materialize,
     )
 
-    assert resolve_materialize(None) is True
+    assert resolve_materialize() is True
     with lazy_results():
-        assert resolve_materialize(None) is False
-        assert resolve_materialize(True) is True  # per-call wins
+        assert resolve_materialize() is False
         with lazy_results():
-            assert resolve_materialize(None) is False
-        assert resolve_materialize(None) is False  # nesting restored
+            assert resolve_materialize() is False
+        assert resolve_materialize() is False  # nesting restored
 
         seen: list[bool] = []
         t = threading.Thread(
-            target=lambda: seen.append(resolve_materialize(None))
+            target=lambda: seen.append(resolve_materialize())
         )
         t.start()
         t.join()
         assert seen == [True]  # other thread: production posture
-    assert resolve_materialize(None) is True
+    assert resolve_materialize() is True
 
 
 def test_conversion_funnel_scans_log_once_per_stage(spark):

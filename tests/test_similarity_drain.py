@@ -1,14 +1,13 @@
-"""r17 scan-allowance drains: the two registered IVF similarity
-queries (`ann_ivf`, `embedding_near_dup`) stage the quantizer
-assignment frame through ONE eager localCheckpoint
-(operators/similarity_staged.py — the r16 dedup-drain playbook on the
-embeddings zone). These pins hold the materialized two-scan posture
-row-identical to the lazy three-scan shapes that stay in
-operators/similarity.py, and pin the physical contract per pytest run:
-TWO embeddings scans per query execution (centroid fit + the
-checkpointed assignment build), result plan parquet-free. Two is the
-documented floor — the only one-scan route checkpoints the raw corpus
-frame before the fit, inverting the 100 TB trade (module docstring)."""
+"""Scan drains of the two IVF similarity operators (`ann_ivf`,
+`embedding_near_dup` in operators/similarity.py): each stages its
+quantizer assignment frame through ONE eager localCheckpoint. These
+pins hold the materialized two-scan posture row-identical to the same
+operator's lazy plan (`lazy_results()`), and pin the physical contract
+per pytest run: TWO embeddings scans per query execution (centroid fit
++ the checkpointed assignment build), result plan parquet-free. Two is
+the documented floor — the only one-scan route checkpoints the raw
+corpus frame before the fit, inverting the 100 TB trade (the IVF
+section note in operators/similarity.py)."""
 
 from __future__ import annotations
 
@@ -18,10 +17,6 @@ from big_data_analytics_final_project_spark.operators.checkpoints import (
 from big_data_analytics_final_project_spark.operators.similarity import (
     ann_ivf,
     embedding_near_dup,
-)
-from big_data_analytics_final_project_spark.operators.similarity_staged import (
-    ann_ivf_staged,
-    embedding_near_dup_staged,
 )
 from big_data_analytics_final_project_spark.queries.similarity import (
     _K_ANN,
@@ -37,30 +32,21 @@ def _emb(spark):
 
 
 def test_ann_ivf_staged_matches_lazy_operator(spark):
-    """Three-way pin: materialized staged == lazy staged == the
-    untouched `similarity.ann_ivf` shape, row for row."""
+    """Materialized `ann_ivf` == its lazy plan, row for row."""
     emb = _emb(spark)
-    mat = ann_ivf_staged(emb, lambda c: c < _N_QUERIES, k=_K_ANN).collect()
+    mat = ann_ivf(emb, lambda c: c < _N_QUERIES, k=_K_ANN).collect()
     with lazy_results():
-        lazy = ann_ivf_staged(
-            emb, lambda c: c < _N_QUERIES, k=_K_ANN
-        ).collect()
-    orig = ann_ivf(emb, lambda c: c < _N_QUERIES, k=_K_ANN).collect()
+        lazy = ann_ivf(emb, lambda c: c < _N_QUERIES, k=_K_ANN).collect()
     assert sorted(map(tuple, mat)) == sorted(map(tuple, lazy))
-    assert sorted(map(tuple, mat)) == sorted(map(tuple, orig))
     assert mat, "empty relation would make the pin vacuous"
 
 
 def test_near_dup_staged_matches_lazy_operator(spark):
     emb = _emb(spark)
-    mat = embedding_near_dup_staged(emb, threshold=_NEAR_DUP_T).collect()
+    mat = embedding_near_dup(emb, threshold=_NEAR_DUP_T).collect()
     with lazy_results():
-        lazy = embedding_near_dup_staged(
-            emb, threshold=_NEAR_DUP_T
-        ).collect()
-    orig = embedding_near_dup(emb, threshold=_NEAR_DUP_T).collect()
+        lazy = embedding_near_dup(emb, threshold=_NEAR_DUP_T).collect()
     assert sorted(map(tuple, mat)) == sorted(map(tuple, lazy))
-    assert sorted(map(tuple, mat)) == sorted(map(tuple, orig))
     assert mat, "empty relation would make the pin vacuous"
 
 
@@ -91,17 +77,17 @@ def _assert_two_scans_and_parquet_free(spark, build):
 
 
 def test_ann_ivf_executed_scans_is_two(spark):
-    """The r17 drain's physical contract, pinned per pytest run (not
-    just per round-end audit): centroid-fit pass + assignment
-    checkpoint fill, then every consumer reads the checkpoint."""
+    """The drain's physical contract, pinned per pytest run (not just
+    per scan audit): centroid-fit pass + assignment checkpoint fill,
+    then every consumer reads the checkpoint."""
     emb = _emb(spark)
     _assert_two_scans_and_parquet_free(
-        spark, lambda: ann_ivf_staged(emb, lambda c: c < _N_QUERIES, k=_K_ANN)
+        spark, lambda: ann_ivf(emb, lambda c: c < _N_QUERIES, k=_K_ANN)
     )
 
 
 def test_near_dup_executed_scans_is_two(spark):
     emb = _emb(spark)
     _assert_two_scans_and_parquet_free(
-        spark, lambda: embedding_near_dup_staged(emb, threshold=_NEAR_DUP_T)
+        spark, lambda: embedding_near_dup(emb, threshold=_NEAR_DUP_T)
     )
